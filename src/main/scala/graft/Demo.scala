@@ -46,7 +46,7 @@ object Demo {
       .select(col("user_id"), col("ts_us"), col("probability_1").as("probability"),
         col("prediction_at_threshold").as("prediction"))
     FeatureStore.logPredictions(scored, s"$outDir/preds")
-    val logged = spark.read.parquet(s"$outDir/preds")
+    val logged = Tables.parquet(spark, s"$outDir/preds")
     println(s"[demo] prediction log: ${logged.count()} rows at $outDir/preds")
 
     val snap7 = FeatureStore.snapshot(gold, 7L, Long.MaxValue)

@@ -270,27 +270,32 @@ object Entries52 {
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
-        val n = docs.count()
         val truth = docs.select(md5(col("text")).as("h"), col("doc_id"))
           .as("x").join(docs.select(md5(col("text")).as("h"),
             col("doc_id").as("doc_id2")).as("y"),
             col("x.h") === col("y.h") && col("x.doc_id") < col("doc_id2"))
-          .select(col("x.doc_id").as("d1"), col("doc_id2").as("d2"))
+          .select(col("x.doc_id").as("d1"), col("doc_id2").as("d2"),
+            lit(1L).as("t"))
         val cand = Dedup.sortedNeighborhoodPairs(docs, 2, 0.0)
           .select(col("d1"), col("d2")).distinct()
-        val nTruth = truth.count()
-        val nCand = cand.count()
-        val nFound = truth.join(cand, Seq("d1", "d2")).count()
-        val spark = s
-        import spark.implicits._
-        Seq((n, nTruth, nCand, nFound)).toDF(
-          "n_docs", "n_truth_pairs", "n_cand_pairs", "n_found_pairs")
+          .withColumn("c", lit(1L))
+        // one lazy plan, no job while building: the truth and candidate
+        // counts and their overlap come from ONE full outer join (both
+        // sides hold each pair once — doc_id is unique, FixtureSchemaSpec),
+        // cross joined with the corpus size
+        val pairs = truth.join(cand, Seq("d1", "d2"), "full_outer")
+          .agg(count(col("t")).as("n_truth_pairs"),
+            count(col("c")).as("n_cand_pairs"),
+            count(when(col("c").isNotNull, col("t"))).as("n_found_pairs"))
+        docs.agg(count(lit(1)).as("n_docs")).crossJoin(pairs)
           .select(col("*"),
-            (when(lit(nTruth) === 0L, 1.0)
-              .otherwise(lit(nFound).cast("double") / lit(nTruth)))
+            (when(col("n_truth_pairs") === 0L, 1.0)
+              .otherwise(col("n_found_pairs").cast("double") /
+                col("n_truth_pairs")))
               .as("pair_completeness"),
-            (lit(1.0) - lit(nCand).cast("double") /
-              (lit(n).cast("double") * (lit(n).cast("double") - 1.0) / 2.0))
+            (lit(1.0) - col("n_cand_pairs").cast("double") /
+              (col("n_docs").cast("double") *
+                (col("n_docs").cast("double") - 1.0) / 2.0))
               .as("reduction_ratio"))
       },
       Some("""WITH b AS (

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ExtEntries.Q
@@ -21,24 +22,35 @@ object Entries54 {
     // zone-map (q143) consumer asks for next.
     Q("q309_equi_depth_hist",
       (s, d) => {
-        // persisted: FOUR consumers (n scalar, approxQuantile, the offsets
-        // branch, the bucketed branch) would otherwise each re-run the
-        // fact scan + reduce; the cached relation is the distinct-cents
+        // persisted: FOUR consumers (n scalar, the quantile summary, the
+        // offsets branch, the bucketed branch) would otherwise each re-run
+        // the fact scan + reduce; the cached relation is the distinct-cents
         // domain, tiny at any SF (the q271 scan-dedup discipline)
         val vals = Tables.lineitem(s, d)
           .select(round(col("l_extendedprice") * 100).cast("long").as("c"))
           .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = vals.agg(sum(col("cnt"))).head().getLong(0)
+        // n stays in the plan: a one-row aggregate cross-joined below
+        val n = vals.agg(sum(col("cnt")).as("__n"))
         val k = 8L
         // distributed CDF (the surrogateKeys discipline): value-range
         // buckets from approx quantiles + a LOCAL running sum per bucket +
         // broadcast earlier-bucket offsets — exact global cumulative counts
         // with NO single-partition window, at any scale. The approx bounds
         // only shape the bucketing; the cumulative sums are exact.
+        // The bounds are the builder's one Spark action, deliberately:
+        // they become literals of the bucket expression, so they must
+        // exist before the plan does. One RDD tree-aggregate computes them
+        // in one job (`stat.approxQuantile` plans a grouped aggregate,
+        // which adaptive execution runs as two).
         val nB = 32
-        val bounds = vals.stat.approxQuantile("c",
-          (1 until nB).map(_.toDouble / nB).toArray, 0.001)
+        val summary = vals.select(col("c").cast("double")).rdd
+          .treeAggregate(new QuantileSummaries(
+            QuantileSummaries.defaultCompressThreshold, 0.001))(
+            (q, r) => q.insert(r.getDouble(0)),
+            (a, b) => a.compress().merge(b.compress()))
+          .compress()
+        val bounds = (1 until nB).flatMap(i => summary.query(i.toDouble / nB))
         val bExpr = bounds.foldLeft(lit(0)) { (acc, b) =>
           acc + when(col("c").cast("double") > lit(b), 1).otherwise(0)
         }
@@ -53,9 +65,10 @@ object Entries54 {
           .agg(coalesce(sum(col("b.__c")), lit(0L)).as("__off"))
           .select(col("a.__b").as("__b"), col("__off"))
         val bucketed = local.join(broadcast(offsets), Seq("__b"))
+          .crossJoin(n)
           .withColumn("cum", col("__cum") + col("__off"))
           .withColumn("bucket",
-            expr(s"least((cum * $k + $n - 1L) DIV $n, $k)"))
+            expr(s"least((cum * $k + __n - 1L) DIV __n, $k)"))
         bucketed.groupBy(col("bucket"))
           .agg(min(col("c")).as("lo_cents"), max(col("c")).as("hi_cents"),
             sum(col("cnt")).as("n_rows"), count(lit(1)).as("ndv"))
@@ -209,26 +222,29 @@ object Entries54 {
     // reactively; this measures it proactively for layout decisions.
     Q("q312_skew_census",
       (s, d) => {
+        // one lazy plan per edge, no job while building: the totals ride
+        // the p99 window as whole-frame sums over the same reduced domain,
+        // so every number comes from ONE count-of-counts pass
         def census(name: String, df: org.apache.spark.sql.DataFrame,
                    key: String) = {
           val counts = df.groupBy(col(key).as("k"))
             .agg(count(lit(1)).as("cnt"))
           val cc = counts.groupBy(col("cnt")).agg(count(lit(1)).as("nkeys"))
-          val tot = cc.agg(sum(col("cnt") * col("nkeys")),
-            sum(col("nkeys")), max(col("cnt"))).head()
-          val (total, ndv, mx) =
-            (tot.getLong(0), tot.getLong(1), tot.getLong(2))
           // p99 key count: largest cnt with ≥1% of keys at-or-above it
-          val w = Window.orderBy(col("cnt").desc)
+          val byCnt = Window.orderBy(col("cnt").desc)
+          val w = byCnt
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val p99 = cc
-            .withColumn("keys_ge", sum(col("nkeys")).over(w))
-            .filter(col("keys_ge") * 100L >= ndv)
-            .agg(max(col("cnt"))).head().getLong(0)
-          val spark = df.sparkSession
-          import spark.implicits._
-          Seq((name, total, ndv, mx, p99)).toDF(
-            "edge", "n_rows", "ndv", "max_key_rows", "p99_key_rows")
+          val all = byCnt
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+          cc.select(col("cnt"), sum(col("nkeys")).over(w).as("keys_ge"),
+              sum(col("cnt") * col("nkeys")).over(all).as("n_rows"),
+              sum(col("nkeys")).over(all).as("ndv"),
+              max(col("cnt")).over(all).as("max_key_rows"))
+            .filter(col("keys_ge") * 100L >= col("ndv"))
+            .groupBy(col("n_rows"), col("ndv"), col("max_key_rows"))
+            .agg(max(col("cnt")).as("p99_key_rows"))
+            .select(lit(name).as("edge"), col("n_rows"), col("ndv"),
+              col("max_key_rows"), col("p99_key_rows"))
         }
         census("lineitem.l_suppkey", Tables.lineitem(s, d), "l_suppkey")
           .unionByName(census("lineitem.l_partkey",

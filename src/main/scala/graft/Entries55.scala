@@ -106,27 +106,26 @@ object Entries55 {
     // and equi-depth histogram (q309).
     Q("q315_encoding_planner",
       (s, d) => {
+        // one lazy plan, no job while building: a one-row aggregate per
+        // column, unioned; a string column's row comes from ONE group-by
+        // of its values (n = Σ group sizes, raw = Σ length · size, the
+        // dictionary payload = Σ length over the distinct values)
         val li = Tables.lineitem(s, d)
-        def intCol(name: String) = {
-          val agg = li.agg(count(lit(1)).as("n"),
-            countDistinct(col(name)).as("ndv")).head()
-          (name, agg.getLong(0), agg.getLong(1), agg.getLong(0) * 8L,
-            agg.getLong(1) * 8L)
-        }
+        def intCol(name: String) =
+          li.agg(count(lit(1)).as("n_rows"), countDistinct(col(name)).as("ndv"))
+            .select(lit(name).as("col_name"), col("n_rows"), col("ndv"),
+              (col("n_rows") * 8L).as("raw_bytes"),
+              (col("ndv") * 8L).as("dict_payload"))
         def strCol(name: String) = {
-          val agg = li.agg(count(lit(1)).as("n"),
-            countDistinct(col(name)).as("ndv"),
-            sum(length(col(name)).cast("long")).as("raw")).head()
-          val distinctBytes = li.select(col(name)).distinct()
-            .agg(sum(length(col(name)).cast("long"))).head().getLong(0)
-          (name, agg.getLong(0), agg.getLong(1), agg.getLong(2),
-            distinctBytes)
+          val len = length(col(name)).cast("long")
+          li.groupBy(col(name)).agg(count(lit(1)).as("m"))
+            .agg(sum(col("m")).as("n_rows"), count(col(name)).as("ndv"),
+              sum(len * col("m")).as("raw_bytes"), sum(len).as("dict_payload"))
+            .select(lit(name).as("col_name"), col("*"))
         }
-        val rows = Seq(intCol("l_partkey"), intCol("l_suppkey"),
-          strCol("l_returnflag"), strCol("l_linestatus"))
-        val spark = s
-        import spark.implicits._
-        rows.toDF("col_name", "n_rows", "ndv", "raw_bytes", "dict_payload")
+        intCol("l_partkey").unionByName(intCol("l_suppkey"))
+          .unionByName(strCol("l_returnflag"))
+          .unionByName(strCol("l_linestatus"))
           .withColumn("code_bits",
             when(col("ndv") <= 1L, 1L)
               .otherwise((length(bin(col("ndv") - 1L))).cast("long")))

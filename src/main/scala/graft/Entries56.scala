@@ -123,28 +123,33 @@ object Entries56 {
     // statistics; everything integer (estimate uses DIV).
     Q("q319_qerror_report",
       (s, d) => {
+        // one lazy plan per edge, no job while building: both sides
+        // reduced to per-key counts and full-outer-joined ONCE — the side
+        // sums are |A| and |B|, the non-null keys per side are the NDVs,
+        // and Σ ca·cb over matched keys is the actual join cardinality
         def edge(name: String, a: org.apache.spark.sql.DataFrame, ka: String,
                  b: org.apache.spark.sql.DataFrame, kb: String) = {
-          val sa = a.agg(count(lit(1)), countDistinct(col(ka))).head()
-          val sb = b.agg(count(lit(1)), countDistinct(col(kb))).head()
-          val (na, ndva) = (sa.getLong(0), sa.getLong(1))
-          val (nb, ndvb) = (sb.getLong(0), sb.getLong(1))
-          val est = na * nb / math.max(ndva, ndvb)
-          val act = a.join(b, col(ka) === col(kb)).count()
-          (name, na, nb, est, act,
-            math.max(est, act), math.max(math.min(est, act), 1L))
+          val ga = a.groupBy(col(ka).as("k")).agg(count(lit(1)).as("ca"))
+          val gb = b.groupBy(col(kb).as("k")).agg(count(lit(1)).as("cb"))
+          ga.as("a").join(gb.as("b"), col("a.k") === col("b.k"), "full_outer")
+            .agg(coalesce(sum(col("ca")), lit(0L)).as("n_left"),
+              coalesce(sum(col("cb")), lit(0L)).as("n_right"),
+              count(col("a.k")).as("ndva"), count(col("b.k")).as("ndvb"),
+              coalesce(sum(col("ca") * col("cb")), lit(0L)).as("act_rows"))
+            .withColumn("est_rows",
+              expr("n_left * n_right DIV greatest(ndva, ndvb)"))
+            .select(lit(name).as("edge"), col("n_left"), col("n_right"),
+              col("est_rows"), col("act_rows"),
+              greatest(col("est_rows"), col("act_rows")).as("qerr_num"),
+              greatest(least(col("est_rows"), col("act_rows")), lit(1L))
+                .as("qerr_den"))
         }
-        val rows = Seq(
-          edge("orders-customer", Tables.orders(s, d), "o_custkey",
-            Tables.customer(s, d), "c_custkey"),
-          edge("lineitem-orders", Tables.lineitem(s, d), "l_orderkey",
-            Tables.orders(s, d), "o_orderkey"),
-          edge("lineitem-part", Tables.lineitem(s, d), "l_partkey",
-            Tables.part(s, d), "p_partkey"))
-        val spark = s
-        import spark.implicits._
-        rows.toDF("edge", "n_left", "n_right", "est_rows", "act_rows",
-          "qerr_num", "qerr_den")
+        edge("orders-customer", Tables.orders(s, d), "o_custkey",
+          Tables.customer(s, d), "c_custkey")
+          .unionByName(edge("lineitem-orders", Tables.lineitem(s, d),
+            "l_orderkey", Tables.orders(s, d), "o_orderkey"))
+          .unionByName(edge("lineitem-part", Tables.lineitem(s, d),
+            "l_partkey", Tables.part(s, d), "p_partkey"))
       },
       Some("""WITH s AS (
              |  SELECT 'orders-customer' AS edge,

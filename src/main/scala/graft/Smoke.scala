@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scratch smoke main: read every fixture table, print schema + count. */
+/** Scratch smoke main: read every fixture table under the sf directory
+  * given as the one argument, print schema + count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    val dir = args(0)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
@@ -16,8 +18,8 @@ object Smoke {
       try {
         // Tables loaders, not raw reads: events needs the nanos-as-long
         // conf (TIMESTAMP(NANOS) is rejected by the vanilla reader)
-        val df = if (t == "events") Tables.events(spark, "/root/testdata/sf0.001")
-          else spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
+        val df = if (t == "events") Tables.events(spark, dir)
+          else Tables.parquet(spark, s"$dir/$t.parquet")
         println(s"== $t rows=${df.count()} schema=${df.schema.simpleString}")
       } catch {
         case e: Throwable => println(s"== $t FAILED: ${e.toString.take(300)}")

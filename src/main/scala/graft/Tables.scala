@@ -1,6 +1,13 @@
 package graft
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver fixture tables (TESTDATA.md / FIXTURES.md §A).
   *
@@ -63,7 +70,67 @@ object Tables {
     * sf0.01) — so the one order-sensitive consumer keeps the serial scan. */
   private[graft] def ordersScanOrder(spark: SparkSession,
                                      dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    parquet(spark, s"$dir/orders.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference Spark job.
+    *
+    * Spark infers a parquet schema from ONE footer — a summary file if the
+    * path has one, else the first data file in path order — but it reads
+    * that footer inside a one-task job (`SchemaMergeUtils
+    * .mergeSchemasInParallel` always runs `parallelize(...).collect()`),
+    * which costs tens of milliseconds per read and runs while a query
+    * builder is still constructing its plan. This picks the same file,
+    * converts its footer in-process with Spark's own conversion and
+    * reads with that schema; the schema and the analyzed plan equal those
+    * of `spark.read.parquet` (FixtureSchemaSpec pins both) as long as
+    * schema merging (`spark.sql.parquet.mergeSchema`, off by default) stays
+    * off. Whenever the footer cannot be resolved here — no data file, a
+    * missing path, an unreadable footer — it defers to
+    * `spark.read.parquet`, so the same result or exception surfaces. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val schema = try footerFile(spark, path).map(footerSchema(spark, _))
+      catch { case NonFatal(_) => None }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The file whose footer Spark's inference reads: `_common_metadata`,
+    * else `_metadata`, else the first data file in path order, over the
+    * leaves Spark's file index lists (hidden `.`/`_` names skipped, except
+    * the summaries and `_k=v` partition directories). */
+  private def footerFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def listed(p: Path): Boolean = {
+      val n = p.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath)).flatMap(leaves)
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+  }
+
+  /** `file`'s footer as the schema Spark's inference derives from it: the
+    * converter settings of `ParquetFileFormat.mergeSchemasInParallel`'s
+    * footer reader, then its `readSchemaFromFooter`. */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
+  }
 
   /** Below this size a relation is dimension-like: one task reads it
     * faster than 32 tasks can be scheduled — never fanned out. */
@@ -120,7 +187,7 @@ object Tables {
   private def load(spark: SparkSession, dir: String, name: String,
                    fanout: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val df = parquet(spark, path)
     if (!fanout) return df
     val bytes = tableBytes(spark, path)
     val par = spark.sparkContext.defaultParallelism

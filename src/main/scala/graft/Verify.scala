@@ -28,13 +28,16 @@ object Verify {
     // their persisted fragments while still bounding accumulated storage
     // blocks to a batch's worth. Results are unaffected either way: a
     // cache hit substitutes an identical-plan fragment, never a value.
-    SparkEntry.queries.toSeq.filter(q => nameFilter(q._1)).sortBy(_._1)
-      .zipWithIndex.foreach { case ((name, fn), i) =>
+    val failed = SparkEntry.queries.toSeq.filter(q => nameFilter(q._1)).sortBy(_._1)
+      .zipWithIndex.flatMap { case ((name, fn), i) =>
       if (i % 25 == 0) spark.sharedState.cacheManager.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -53,5 +56,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a failed query fails the run; the dump above is still complete for
+    // every query that succeeded
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

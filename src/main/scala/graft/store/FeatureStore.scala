@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.ops.{Features, Labels, Snapshots}
 
 /** The feature-store facade — the engine-level equivalent of the reference's
@@ -117,7 +118,7 @@ object FeatureStore {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(hPath)) { writeGold(updates, path); return }
-    val existing = spark.read.parquet(path) // partition column `date` included
+    val existing = Tables.parquet(spark, path) // partition column `date` included
     val updKeys = updates.select(keyCols.map(col): _*)
     // driver-side list of affected dates (small: one row per distinct date)
     val updDates = updates
@@ -196,7 +197,7 @@ object FeatureStore {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(hPath)) return 0L
-    val existing = spark.read.parquet(path)
+    val existing = Tables.parquet(spark, path)
     val k = broadcast(keys.select(keyCols.map(col): _*).distinct())
     val hit = existing.join(k, keyCols, "left_semi")
     // driver-side affected-date list: one row per distinct date, tiny
@@ -234,7 +235,7 @@ object FeatureStore {
     val remaining = dates.filter(keptDates)
     val survivors =
       if (remaining.isEmpty) 0L
-      else spark.read.parquet(path)
+      else Tables.parquet(spark, path)
         .filter(col("date").isin(remaining.toSeq: _*))
         .join(k, keyCols, "left_semi").count()
     require(survivors == 0L,
@@ -293,7 +294,7 @@ object FeatureStore {
       val n = in.read(bytes); in.close()
       new String(bytes, 0, n, "UTF-8").trim.toInt
     }
-    spark.read.parquet(s"$path/v=$v")
+    Tables.parquet(spark, s"$path/v=$v")
   }
 
   /** S4 — append-only prediction log, date-partitioned (reference:

@@ -45,7 +45,7 @@ object LocalInfer {
     val (model, rec) = graft.ml.ChurnModel.loadExperiment(expDir)
     val scorer = ServingEndpoint.pipelineScorer(model)
     val threshold = opts.get("threshold").map(_.toDouble).getOrElse(0.5)
-    val gold = spark.read.parquet(featuresDir)
+    val gold = graft.Tables.parquet(spark, featuresDir)
 
     def score(row: Map[String, Any]): (Double, Int) = {
       val x = rec.featureNames.map(n =>

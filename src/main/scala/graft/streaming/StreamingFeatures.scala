@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Tables
 
 /** M5 — Structured Streaming incremental materialization (SURVEY.md §2.8).
   *
@@ -60,7 +61,7 @@ object StreamingFeatures {
     * window end. */
   def streamSlidingAgg(spark: SparkSession, eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val ev = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -83,7 +84,7 @@ object StreamingFeatures {
   def streamStreamClicksBeforePurchase(spark: SparkSession,
                                        eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     def src = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -114,7 +115,7 @@ object StreamingFeatures {
   def streamStreamLeftOuterClicks(spark: SparkSession,
                                   eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     def src = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -139,7 +140,7 @@ object StreamingFeatures {
     * per id, expired by the watermark. */
   def streamDedup(spark: SparkSession, eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -156,7 +157,7 @@ object StreamingFeatures {
   def streamDedupWithinWatermark(spark: SparkSession, eventsDir: String,
                                  maxFilesPerTrigger: Int = 0): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -175,7 +176,7 @@ object StreamingFeatures {
   def streamTumblingAgg(spark: SparkSession, eventsDir: String,
                         maxFilesPerTrigger: Int = 0): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     // maxFilesPerTrigger splits a backlog into multiple micro-batches —
     // the replay path (StreamingSpec asserts multi-batch parity with batch)
@@ -236,7 +237,7 @@ object StreamingFeatures {
                               checkpointDir: Option[String] = None,
                               maxFilesPerTrigger: Int = 0): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -249,7 +250,7 @@ object StreamingFeatures {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val touched = batch.select(col("user_id")).distinct()
         // full history for the touched users (bounded-lookback read at scale)
-        val history = spark.read.parquet(eventsDir)
+        val history = Tables.parquet(spark, eventsDir)
           .withColumn("ts_us", tsUsExpr(schema))
           .join(broadcast(touched), Seq("user_id"))
         val snaps = graft.store.FeatureStore.latestSnapshots(
@@ -303,7 +304,7 @@ object StreamingFeatures {
     graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bitmapMerge, bitmapSketch}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -329,7 +330,7 @@ object StreamingFeatures {
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged = (if (fs.exists(hPath)) {
-          val existing = spark.read.parquet(storePath)
+          val existing = Tables.parquet(spark, storePath)
           // only the weeks touched by THIS batch are read and re-merged
           existing.join(broadcast(part.select(col("week"))), Seq("week"))
             .unionByName(part)
@@ -383,7 +384,7 @@ object StreamingFeatures {
                       checkpointDir: Option[String] = None): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -425,7 +426,7 @@ object StreamingFeatures {
       // only the weeks touched by THIS batch are read (partition pruning
       // via the broadcast week list); materialized once — the replay
       // filter and the merge union are two consumers of a few rows
-      val touched = spark.read.parquet(storePath)
+      val touched = Tables.parquet(spark, storePath)
         .join(broadcast(part.select(col("week"))), Seq("week"))
         .localCheckpoint()
       val replayedWeeks = touched
@@ -464,7 +465,7 @@ object StreamingFeatures {
                       checkpointDir: Option[String] = None): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -495,7 +496,7 @@ object StreamingFeatures {
     val hPath = new org.apache.hadoop.fs.Path(storePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val merged = (if (fs.exists(hPath)) {
-      val touched = spark.read.parquet(storePath)
+      val touched = Tables.parquet(spark, storePath)
         .join(broadcast(part.select(col("week"))), Seq("week"))
         .localCheckpoint()
       val replayedWeeks = touched
@@ -535,7 +536,7 @@ object StreamingFeatures {
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -561,7 +562,7 @@ object StreamingFeatures {
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged = (if (fs.exists(hPath)) {
-          spark.read.parquet(storePath)
+          Tables.parquet(spark, storePath)
             .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
             .select(col("week"), col("j"), col("m_j"))
             .unionByName(part)
@@ -598,7 +599,7 @@ object StreamingFeatures {
                         maxFilesPerTrigger: Int = 0,
                         checkpointDir: Option[String] = None): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -626,7 +627,7 @@ object StreamingFeatures {
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged = (if (fs.exists(hPath)) {
-          kSmallest(spark.read.parquet(storePath)
+          kSmallest(Tables.parquet(spark, storePath)
             .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
             .select(col("week"), col("hv"))
             .unionByName(part)
@@ -663,7 +664,7 @@ object StreamingFeatures {
                            maxFilesPerTrigger: Int = 0,
                            checkpointDir: Option[String] = None): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -698,7 +699,7 @@ object StreamingFeatures {
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged = (if (fs.exists(hPath)) {
-          topK(spark.read.parquet(storePath)
+          topK(Tables.parquet(spark, storePath)
             .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
             .select(col("week"), col("event_id"), col("w"), col("pq"))
             .unionByName(part)
@@ -721,7 +722,7 @@ object StreamingFeatures {
     * rows, est = Σ ŵ. Returns (week, n_kept, tau, est_cents). */
   def priorityWeeklyEstimates(spark: SparkSession, storePath: String,
                               k: Int = 32): org.apache.spark.sql.DataFrame = {
-    val st = spark.read.parquet(storePath)
+    val st = Tables.parquet(spark, storePath)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("week"))
@@ -747,14 +748,14 @@ object StreamingFeatures {
   def thetaWeeklyEstimates(spark: SparkSession, storePath: String,
                            k: Int = 64): org.apache.spark.sql.DataFrame = {
     val hSpace = 281474976710656L // 2^48 — contentId is 48-bit
-    spark.read.parquet(storePath)
+    Tables.parquet(spark, storePath)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("week")).orderBy(col("hv").asc)))
       .groupBy(col("week"))
       .agg(coalesce(max(when(col("rn") === k + 1, col("hv"))),
         lit(hSpace)).as("theta"))
-      .join(spark.read.parquet(storePath), Seq("week"))
+      .join(Tables.parquet(spark, storePath), Seq("week"))
       .filter(col("hv") < col("theta"))
       .groupBy(col("week"), col("theta"))
       .agg(count(lit(1)).as("n_ret"))
@@ -783,7 +784,7 @@ object StreamingFeatures {
                           maxFilesPerTrigger: Int = 0,
                           checkpointDir: Option[String] = None): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -810,7 +811,7 @@ object StreamingFeatures {
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged = (if (fs.exists(hPath)) {
-          spark.read.parquet(storePath)
+          Tables.parquet(spark, storePath)
             .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
             .select(col("week"), col("j"), col("minh"))
             .unionByName(part)
@@ -834,7 +835,7 @@ object StreamingFeatures {
   def minhashWeeklyJaccard(spark: SparkSession,
                            storePath: String): org.apache.spark.sql.DataFrame = {
     val k = graft.ext.Dedup.NumHashes
-    val st = spark.read.parquet(storePath)
+    val st = Tables.parquet(spark, storePath)
       .selectExpr("CAST(week AS BIGINT) AS week", "j", "minh")
     st.join(st.selectExpr("week - 1 AS week", "j", "minh AS minh2"),
         Seq("week", "j"))
@@ -865,7 +866,7 @@ object StreamingFeatures {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val ev = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -925,7 +926,7 @@ object StreamingFeatures {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val ev = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("cents",
@@ -980,7 +981,7 @@ object StreamingFeatures {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val ev = spark.readStream.schema(schema).parquet(eventsDir)
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -1066,7 +1067,7 @@ object StreamingFeatures {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val ev = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -1138,7 +1139,7 @@ object StreamingFeatures {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val ev = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -1215,7 +1216,7 @@ object StreamingFeatures {
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquet(spark, eventsDir).schema
     val reader = spark.readStream.schema(schema)
     val raw = (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
@@ -1257,7 +1258,7 @@ object StreamingFeatures {
     val hPath = new org.apache.hadoop.fs.Path(storePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val merged = (if (fs.exists(hPath)) {
-      val touched = spark.read.parquet(storePath)
+      val touched = Tables.parquet(spark, storePath)
         .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
         .localCheckpoint()
       val replayedWeeks = touched
@@ -1289,7 +1290,7 @@ object StreamingFeatures {
     * window is per-week over the bucket domain (never fact-sized). */
   def hdrWeeklyQuantiles(spark: SparkSession, storePath: String,
                          qs: Seq[Long] = Seq(50L, 90L, 99L)): DataFrame = {
-    val store = spark.read.parquet(storePath)
+    val store = Tables.parquet(spark, storePath)
     val cum = store.withColumn("cum", sum(col("c")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("week"))
           .orderBy(col("b_id"))))

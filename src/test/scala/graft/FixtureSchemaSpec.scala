@@ -128,4 +128,60 @@ class FixtureSchemaSpec extends SparkSpec {
     assert(ev.filter(unix_micros(col("ts")) =!= col("ts_us")).limit(1)
       .collect().isEmpty)
   }
+
+  /** [[Tables.parquet]] must read `path` exactly as `spark.read.parquet`
+    * does: the same schema, and analyzed plans that give the same result
+    * (so a cached fragment built through one is found through the other). */
+  private def assertSameRead(path: String): Unit = {
+    val want = spark.read.parquet(path)
+    val got = Tables.parquet(spark, path)
+    assert(got.schema == want.schema, s"$path: schema")
+    assert(got.queryExecution.analyzed.sameResult(want.queryExecution.analyzed),
+      s"$path: analyzed plans differ\n${got.queryExecution.analyzed}\n" +
+        s"${want.queryExecution.analyzed}")
+  }
+
+  test("Tables.parquet reads every fixture table as spark.read.parquet does") {
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings")
+      .foreach(t => assertSameRead(s"$sf/$t.parquet"))
+  }
+
+  test("Tables.parquet matches spark.read.parquet on gold, prediction-log " +
+    "and streaming store directories") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.store.FeatureStore
+    import graft.streaming.StreamingFeatures
+    val dir = Files.createTempDirectory("parquet_read").toString
+    val gold = FeatureStore.buildGold(spark, sf)
+    FeatureStore.writeGold(gold, s"$dir/gold")
+    assertSameRead(s"$dir/gold")
+    FeatureStore.logPredictions(gold.select(col("user_id"), col("ts_us"),
+      lit(0.5).as("probability"), lit(1).as("prediction")), s"$dir/preds")
+    assertSameRead(s"$dir/preds")
+
+    val events = Files.createDirectory(java.nio.file.Paths.get(s"$dir/events"))
+    Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
+      events.resolve("part-000.parquet"))
+    // each sink's store after one AvailableNow batch over the staged file
+    def oneBatch(store: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      q.processAllAvailable(); q.stop()
+      assertSameRead(store)
+    }
+    val ev = events.toString
+    oneBatch(s"$dir/bitmap", StreamingFeatures.streamSketchUpsert(spark, ev, s"$dir/bitmap"))
+    oneBatch(s"$dir/kll", StreamingFeatures.streamKllUpsert(spark, ev, s"$dir/kll"))
+    oneBatch(s"$dir/theta", StreamingFeatures.streamThetaUpsert(spark, ev, s"$dir/theta"))
+  }
+
+  test("Tables.parquet on an empty or missing path throws what " +
+    "spark.read.parquet throws") {
+    val empty = java.nio.file.Files.createTempDirectory("parquet_empty").toString
+    for (path <- Seq(empty, s"$empty/missing")) {
+      val want = intercept[Exception](spark.read.parquet(path))
+      val got = intercept[Exception](Tables.parquet(spark, path))
+      assert(got.getClass == want.getClass, s"$path: ${got.getMessage}")
+    }
+  }
 }
