@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully evaluated via a noop datasource
   * write — `count()` would let Catalyst prune the projected columns and
@@ -7,21 +6,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // optional dev filter: bench only queries whose name matches args(0)
     // (regex, substring-anchored); the driver passes no args = all queries
     val nameFilter: String => Boolean =
       if (args.isEmpty) _ => true
       else { val re = args(0).r; n => re.findFirstIn(n).isDefined }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEnv.session(cpus, "graft-bench")
     // TWO passes at the TARGET sf, second one reported (r13 — was a
     // separate sf0.001 warm-up sweep + min-of-2 timed passes, i.e. three
     // passes total, which blew the driver's 60-minute bench window in

@@ -105,7 +105,6 @@ object Entries10 {
     // answered without re-scanning facts.
     Q("q166_sketch_overlap",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.functions.GraftFunctions._
         val ev = Tables.events(s, d)
           .select(col("user_id"), col("event_type"),
@@ -166,7 +165,6 @@ object Entries10 {
     // BOTH pipelines and the comparison.
     Q("q168_ann_recall",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.ext.{Eval, Similarity}
         // persisted (plan census r9): the IVF path (centroids +
         // assignment + probes) and the brute-force truth share one
@@ -261,7 +259,6 @@ object Entries10 {
     // decision, measured.
     Q("q171_truncdim_recall",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.ext.{Eval, Similarity}
         // persisted (plan census r9): full and truncated brute-force
         // passes read the same vectors

@@ -55,7 +55,6 @@ object Entries11 {
     // hash-matches.
     Q("q176_cms_estimate",
       (s, d) => {
-        GraftFunctions.register(s)
         val keys = Tables.lineitem(s, d)
           .select(col("l_partkey"), col("l_partkey").cast("string").as("k"))
         val sketch = keys.agg(GraftFunctions.cmsSketch(col("k")).as("sk"))

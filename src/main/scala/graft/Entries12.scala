@@ -150,7 +150,6 @@ object Entries12 {
     // replayed round-by-round in the oracle.
     Q("q180_kcenter_coreset",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.kCenterGreedy(Tables.embeddings(s, d), 8)
       },
       Some(kCenterSql(8))),
@@ -160,7 +159,6 @@ object Entries12 {
     // re-ranked to a fused top-5 per query.
     Q("q181_rrf_fusion",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): both fused rankers read the same
         // vectors
         val emb = Tables.embeddings(s, d)

@@ -55,7 +55,6 @@ object Entries20 {
     // an embedding table is trusted by ANN/dedup.
     Q("q198_embedding_audit",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
           .withColumn("norm2", graft.ext.Similarity.norm2(col("embedding")))
         e.groupBy(col("label"))

@@ -60,7 +60,6 @@ object Entries23 {
     // the plain semi-join the oracle runs (ext/Bloom.scala).
     Q("q213_bloom_member",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val probe = docs.filter(col("source") === "src7")
           .select(col("doc_id"),

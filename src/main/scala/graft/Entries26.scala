@@ -95,7 +95,6 @@ object Entries26 {
     // KPI surface of the sketch family.
     Q("q225_weekly_overlap",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.functions.GraftFunctions._
         val wk = Tables.events(s, d)
           .select((col("ts_us") / 604800000000L).cast("long").as("week"),

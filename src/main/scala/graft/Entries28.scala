@@ -20,7 +20,6 @@ object Entries28 {
     // oracle re-joins distinct user sets per cell.
     Q("q231_event_venn3",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.functions.GraftFunctions._
         val ev = Tables.events(s, d)
         def bm(t: String) = ev.filter(col("event_type") === t)
@@ -33,8 +32,8 @@ object Entries28 {
             bitmapAndCount(col("bm_view"), col("bm_click")).as("n_ab"),
             bitmapAndCount(col("bm_view"), col("bm_purchase")).as("n_ac"),
             bitmapAndCount(col("bm_click"), col("bm_purchase")).as("n_bc"),
-            bitmapCount(bitmapAnd(bitmapAnd(col("bm_view"), col("bm_click")),
-              col("bm_purchase"))).as("n_abc"))
+            bitmapAndCount(bitmapAnd(col("bm_view"), col("bm_click")),
+              col("bm_purchase")).as("n_abc"))
       },
       Some("""WITH a AS (SELECT DISTINCT user_id FROM events
              |  WHERE event_type = 'view'),

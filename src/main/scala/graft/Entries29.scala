@@ -164,7 +164,6 @@ object Entries29 {
     // through the same operator.
     Q("q236_knn_accuracy",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val q = e.filter(col("vec_id") < 500)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),

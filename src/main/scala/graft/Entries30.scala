@@ -21,7 +21,6 @@ object Entries30 {
     // sketch table, never on facts.
     Q("q237_rolling_distinct",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.functions.GraftFunctions._
         // materialized ONCE: three consumers below (offset spine, window
         // join, anchor semi-join) would otherwise re-plan the scan +

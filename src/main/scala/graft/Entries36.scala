@@ -115,7 +115,6 @@ object Entries36 {
     // the composed operator a user actually runs.
     Q("q260_er_pipeline",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val base = Tables.customer(s, d)
           .select(col("c_custkey").as("rid"), col("c_name").as("name"))
         val dirty = base.filter(col("rid") % 11 === 0)

@@ -36,7 +36,6 @@ object Entries4 {
     // with a lower-id cosine>=0.4 neighbor in the same cluster
     Q("q102_semantic_dedup",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Curation.semanticDedup(Tables.embeddings(s, d), 100, 0.4)
       },
       Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS c_emb

@@ -52,7 +52,6 @@ object Entries48 {
     // of q180's pure-coverage k-center.
     Q("q285_mmr_select",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.mmrSelect(Tables.embeddings(s, d), 6, 0.7, 0.3)
       },
       Some(mmrSql(6))),

@@ -136,7 +136,6 @@ object Entries51 {
     // sketch is a few KiB per rollup cell.
     Q("q295_kll_gate",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val li = Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_extendedprice"))
         val labels = graft.functions.KllCodec.Quantiles

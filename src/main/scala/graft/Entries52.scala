@@ -268,7 +268,6 @@ object Entries52 {
     // exact-text pairs (md5 equality — itself a scalable groupBy, q20).
     Q("q302_blocking_metrics",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val truth = docs.select(md5(col("text")).as("h"), col("doc_id"))
           .as("x").join(docs.select(md5(col("text")).as("h"),

@@ -29,7 +29,6 @@ object Entries53 {
     // the integer table above, so every metric is a ratio of exact BIGINTs.
     Q("q305_retrieval_eval",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): truth and IVF paths share one
         // embeddings relation — 6 scans → 1
         val emb = Tables.embeddings(s, d)

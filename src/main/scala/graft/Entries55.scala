@@ -41,7 +41,6 @@ object Entries55 {
     // split+posexplode formulation. Top-50 grams by count with pinned ties.
     Q("q313_chargram_counts",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .select(col("doc_id"), expr("char_grams(text, 4)"))
           .groupBy(col("gram")).agg(count(lit(1)).as("n_occ"),

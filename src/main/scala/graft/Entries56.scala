@@ -194,7 +194,6 @@ object Entries56 {
     // against its exact rank, ε = 2%.
     Q("q320_kll_rollup",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val li = Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_linestatus"),
             col("l_extendedprice"))

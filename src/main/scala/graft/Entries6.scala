@@ -258,7 +258,6 @@ object Entries6 {
     // is exercised on every row.
     Q("q133_jaro_winkler",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.functions.GraftFunctions.jaroWinkler
         Tables.customer(s, d).select(
           col("c_custkey"),
@@ -280,7 +279,6 @@ object Entries6 {
     // pushed into the broadcast join.
     Q("q134_hard_negatives",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.hardNegatives(Tables.embeddings(s, d), 20, 3)
       },
       Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb,
@@ -307,7 +305,6 @@ object Entries6 {
     // order — an independent formulation of the same neighborhood.
     Q("q135_sorted_neighborhood",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Dedup.sortedNeighborhoodPairs(Tables.documents(s, d), 2, 0.95)
       },
       Some("""WITH b AS (

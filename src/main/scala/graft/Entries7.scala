@@ -73,7 +73,6 @@ object Entries7 {
     // OR-merging the stored sketches — no fact re-scan, exact answer.
     Q("q140_sketch_rollup",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val oc = Tables.orders(s, d)
           .join(broadcast(Tables.customer(s, d)
             .select(col("c_custkey"), col("c_nationkey"))),
@@ -164,7 +163,6 @@ object Entries7 {
     // by the oracle.
     Q("q142_pq_codes",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): codebook training and encoding
         // read the same vectors
         val emb = Tables.embeddings(s, d)
@@ -178,7 +176,6 @@ object Entries7 {
     // the codebooks, approx distance = ordered fold of 4 table lookups.
     Q("q145_pq_adc",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): codebooks, codes and query
         // distance tables all derive from the one embeddings relation
         val emb = Tables.embeddings(s, d)

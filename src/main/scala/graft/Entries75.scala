@@ -554,7 +554,6 @@ object Entries75 {
   private val ivfSweep: Q =
     Q("q429_ivf_nprobe_sweep",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         graft.ext.Similarity.ivfSweep(emb, 20, 5, 100, Seq(1, 2, 4, 8))
@@ -640,7 +639,6 @@ object Entries75 {
   private val ivfTrainedSweep: Q =
     Q("q432_ivf_trained_sweep",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // checkpointed: the trained quantizer feeds BOTH the corpus
@@ -688,7 +686,6 @@ object Entries75 {
   private val sqlIvfConsumer: Q =
     Q("q430_sql_ivf_recall",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         graft.ext.SqlSurface.registerSimilarityViews(s, emb)
@@ -755,7 +752,6 @@ object Entries75 {
   private val sqlTrainPrepConsumer: Q =
     Q("q431_sql_split_budget",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted: BOTH views (split, token stats) read the corpus —
         // one scan, not one per view (the q168 census discipline)
         val docs = Tables.documents(s, d)

@@ -76,7 +76,6 @@ object Entries8 {
     // neighborhood structure.
     Q("q153_mutual_knn",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.mutualKnn(Tables.embeddings(s, d), 3)
       },
       Some {

@@ -190,7 +190,6 @@ object Entries85 {
   private val nnDescent: Q =
     Q("q468_nn_descent",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.ext.Similarity.cosine
         val emb = Tables.embeddings(s, d)
           .persist(StorageLevel.MEMORY_AND_DISK)

@@ -209,7 +209,6 @@ object ExtEntries {
     // Embedding near-dup pairs via sign-random-projection buckets + exact cos
     Q("q26_embed_neardup",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.embeddingNearDupPairs(Tables.embeddings(s, d), 8, 0.4)
       },
       Some(s"""WITH b AS (
@@ -222,7 +221,6 @@ object ExtEntries {
     // Exact brute-force cosine top-5 for 20 query vectors
     Q("q27_ann_topk",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Similarity.bruteForceTopK(Tables.embeddings(s, d), 20, 5)
       },
       Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
@@ -239,7 +237,6 @@ object ExtEntries {
     // IVF top-5: deterministic coarse centroids (vec_id % 100 == 0), nprobe=2
     Q("q28_ann_ivf",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): centroids, assignment corpus and
         // probe queries all derive from the one embeddings relation
         val emb = Tables.embeddings(s, d)
@@ -331,7 +328,6 @@ object ExtEntries {
     // identical trajectory as two unrolled SQL iterations
     Q("q53_kmeans",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // persisted (plan census r9): every assignment round and the
         // final labeling re-read the same vectors
         val emb = Tables.embeddings(s, d)
@@ -446,7 +442,6 @@ object ExtEntries {
     // COUNT(DISTINCT)
     Q("q35_distinct_window",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val base = graft.ops.Features.eventFrame(Tables.events(s, d))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("ts_us"))
@@ -465,7 +460,6 @@ object ExtEntries {
     // semantics as q33's declarative formulation, same oracle)
     Q("q36_fingerprint_native",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d).select(col("doc_id"),
           graft.functions.GraftFunctions.asciiFingerprint(col("text")).as("fp"))
       },

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch smoke main: read every fixture table under the sf directory
   * given as the one argument, print schema + count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEnv.session(4, "graft-smoke")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     for (t <- tables) {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ExtEntries.Q
 
 /** Driver contract — one `queries` entry + DuckDB `oracleSql` per implemented
   * operator from SURVEY.md §2. Column names/aliases are kept identical
@@ -63,10 +64,6 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- queries
-
-  private case class Q(name: String,
-                       fn: (SparkSession, String) => DataFrame,
-                       sql: Option[String])
 
   private def lineitem(s: SparkSession, d: String) = Tables.lineitem(s, d)
 
@@ -694,197 +691,35 @@ object SparkEntry {
       })
   )
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (all.map(q => q.name -> q.fn) ++
-      ExtEntries.all.map(q => q.name -> q.fn) ++
-      Entries3.all.map(q => q.name -> q.fn) ++
-      Entries4.all.map(q => q.name -> q.fn) ++
-      Entries5.all.map(q => q.name -> q.fn) ++
-      Entries6.all.map(q => q.name -> q.fn) ++
-      Entries7.all.map(q => q.name -> q.fn) ++
-      Entries8.all.map(q => q.name -> q.fn) ++
-      Entries9.all.map(q => q.name -> q.fn) ++
-      Entries10.all.map(q => q.name -> q.fn) ++
-      Entries11.all.map(q => q.name -> q.fn) ++
-      Entries12.all.map(q => q.name -> q.fn) ++
-      Entries13.all.map(q => q.name -> q.fn) ++
-      Entries14.all.map(q => q.name -> q.fn) ++
-      Entries15.all.map(q => q.name -> q.fn) ++
-      Entries16.all.map(q => q.name -> q.fn) ++
-      Entries17.all.map(q => q.name -> q.fn) ++
-      Entries18.all.map(q => q.name -> q.fn) ++
-      Entries19.all.map(q => q.name -> q.fn) ++
-      Entries20.all.map(q => q.name -> q.fn) ++
-      Entries21.all.map(q => q.name -> q.fn) ++
-      Entries22.all.map(q => q.name -> q.fn) ++
-      Entries23.all.map(q => q.name -> q.fn) ++
-      Entries24.all.map(q => q.name -> q.fn) ++
-      Entries25.all.map(q => q.name -> q.fn) ++
-      Entries26.all.map(q => q.name -> q.fn) ++
-      Entries27.all.map(q => q.name -> q.fn) ++
-      Entries28.all.map(q => q.name -> q.fn) ++
-      Entries29.all.map(q => q.name -> q.fn) ++
-      Entries30.all.map(q => q.name -> q.fn) ++
-      Entries31.all.map(q => q.name -> q.fn) ++
-      Entries32.all.map(q => q.name -> q.fn) ++
-      Entries33.all.map(q => q.name -> q.fn) ++
-      Entries34.all.map(q => q.name -> q.fn) ++
-      Entries35.all.map(q => q.name -> q.fn) ++
-      Entries36.all.map(q => q.name -> q.fn) ++
-      Entries37.all.map(q => q.name -> q.fn) ++
-      Entries38.all.map(q => q.name -> q.fn) ++
-      Entries39.all.map(q => q.name -> q.fn) ++
-      Entries40.all.map(q => q.name -> q.fn) ++
-      Entries41.all.map(q => q.name -> q.fn) ++
-      Entries42.all.map(q => q.name -> q.fn) ++
-      Entries43.all.map(q => q.name -> q.fn) ++
-      Entries44.all.map(q => q.name -> q.fn) ++
-      Entries45.all.map(q => q.name -> q.fn) ++
-      Entries46.all.map(q => q.name -> q.fn) ++
-      Entries47.all.map(q => q.name -> q.fn) ++
-      Entries48.all.map(q => q.name -> q.fn) ++
-      Entries49.all.map(q => q.name -> q.fn) ++
-      Entries50.all.map(q => q.name -> q.fn) ++
-      Entries51.all.map(q => q.name -> q.fn) ++
-      Entries52.all.map(q => q.name -> q.fn) ++
-      Entries53.all.map(q => q.name -> q.fn) ++
-      Entries54.all.map(q => q.name -> q.fn) ++
-      Entries55.all.map(q => q.name -> q.fn) ++
-      Entries56.all.map(q => q.name -> q.fn) ++
-      Entries57.all.map(q => q.name -> q.fn) ++
-      Entries58.all.map(q => q.name -> q.fn) ++
-      Entries59.all.map(q => q.name -> q.fn) ++
-      Entries60.all.map(q => q.name -> q.fn) ++
-      Entries61.all.map(q => q.name -> q.fn) ++
-      Entries62.all.map(q => q.name -> q.fn) ++
-      Entries63.all.map(q => q.name -> q.fn) ++
-      Entries64.all.map(q => q.name -> q.fn) ++
-      Entries65.all.map(q => q.name -> q.fn) ++
-      Entries66.all.map(q => q.name -> q.fn) ++
-      Entries67.all.map(q => q.name -> q.fn) ++
-      Entries68.all.map(q => q.name -> q.fn) ++
-      Entries69.all.map(q => q.name -> q.fn) ++
-      Entries70.all.map(q => q.name -> q.fn) ++
-      Entries71.all.map(q => q.name -> q.fn) ++
-      Entries72.all.map(q => q.name -> q.fn) ++
-      Entries73.all.map(q => q.name -> q.fn) ++
-      Entries74.all.map(q => q.name -> q.fn) ++
-      Entries75.all.map(q => q.name -> q.fn) ++
-      Entries76.all.map(q => q.name -> q.fn) ++
-      Entries77.all.map(q => q.name -> q.fn) ++
-      Entries78.all.map(q => q.name -> q.fn) ++
-      Entries79.all.map(q => q.name -> q.fn) ++
-      Entries80.all.map(q => q.name -> q.fn) ++
-      Entries81.all.map(q => q.name -> q.fn) ++
-      Entries82.all.map(q => q.name -> q.fn) ++
-      Entries83.all.map(q => q.name -> q.fn) ++
-      Entries84.all.map(q => q.name -> q.fn) ++
-      Entries85.all.map(q => q.name -> q.fn) ++
-      Entries86.all.map(q => q.name -> q.fn) ++
-      Entries87.all.map(q => q.name -> q.fn) ++
-      Entries88.all.map(q => q.name -> q.fn) ++
-      Entries89.all.map(q => q.name -> q.fn) ++
-      Entries90.all.map(q => q.name -> q.fn) ++
-      Entries91.all.map(q => q.name -> q.fn) ++
-      Entries92.all.map(q => q.name -> q.fn) ++
-      Entries93.all.map(q => q.name -> q.fn) ++
-      Entries94.all.map(q => q.name -> q.fn) ++
-      Entries95.all.map(q => q.name -> q.fn)).toMap
+  /** Every batch of queries, in registry order. */
+  private val batches: Seq[Seq[Q]] = Seq(
+    all, ExtEntries.all, Entries3.all, Entries4.all, Entries5.all,
+    Entries6.all, Entries7.all, Entries8.all, Entries9.all, Entries10.all,
+    Entries11.all, Entries12.all, Entries13.all, Entries14.all, Entries15.all,
+    Entries16.all, Entries17.all, Entries18.all, Entries19.all, Entries20.all,
+    Entries21.all, Entries22.all, Entries23.all, Entries24.all, Entries25.all,
+    Entries26.all, Entries27.all, Entries28.all, Entries29.all, Entries30.all,
+    Entries31.all, Entries32.all, Entries33.all, Entries34.all, Entries35.all,
+    Entries36.all, Entries37.all, Entries38.all, Entries39.all, Entries40.all,
+    Entries41.all, Entries42.all, Entries43.all, Entries44.all, Entries45.all,
+    Entries46.all, Entries47.all, Entries48.all, Entries49.all, Entries50.all,
+    Entries51.all, Entries52.all, Entries53.all, Entries54.all, Entries55.all,
+    Entries56.all, Entries57.all, Entries58.all, Entries59.all, Entries60.all,
+    Entries61.all, Entries62.all, Entries63.all, Entries64.all, Entries65.all,
+    Entries66.all, Entries67.all, Entries68.all, Entries69.all, Entries70.all,
+    Entries71.all, Entries72.all, Entries73.all, Entries74.all, Entries75.all,
+    Entries76.all, Entries77.all, Entries78.all, Entries79.all, Entries80.all,
+    Entries81.all, Entries82.all, Entries83.all, Entries84.all, Entries85.all,
+    Entries86.all, Entries87.all, Entries88.all, Entries89.all, Entries90.all,
+    Entries91.all, Entries92.all, Entries93.all, Entries94.all, Entries95.all)
 
-  def oracleSql: Map[String, String] =
-    (all.flatMap(q => q.sql.map(q.name -> _)) ++
-      ExtEntries.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries3.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries4.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries5.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries6.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries7.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries8.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries9.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries10.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries11.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries12.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries13.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries14.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries15.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries16.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries17.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries18.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries19.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries20.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries21.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries22.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries23.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries24.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries25.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries26.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries27.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries28.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries29.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries30.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries31.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries32.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries33.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries34.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries35.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries36.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries37.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries38.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries39.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries40.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries41.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries42.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries43.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries44.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries45.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries46.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries47.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries48.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries49.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries50.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries51.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries52.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries53.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries54.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries55.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries56.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries57.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries58.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries59.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries60.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries61.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries62.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries63.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries64.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries65.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries66.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries67.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries68.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries69.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries70.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries71.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries72.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries73.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries74.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries75.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries76.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries77.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries78.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries79.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries80.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries81.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries82.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries83.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries84.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries85.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries86.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries87.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries88.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries89.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries90.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries91.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries92.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries93.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries94.all.flatMap(q => q.sql.map(q.name -> _)) ++
-      Entries95.all.flatMap(q => q.sql.map(q.name -> _))).toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val names = batches.flatten.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+    batches.flatten.map(q => q.name -> q.fn).toMap
+  }
+
+  val oracleSql: Map[String, String] =
+    batches.flatten.flatMap(q => q.sql.map(q.name -> _)).toMap
 }

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the engine's standard configuration.
-  *
-  * Used by tests and ad-hoc mains; `Verify`/`Bench` build their own sessions
-  * per the driver contract but apply the same settings.
+/** The one SparkSession factory: tests, `Verify`, `Bench`, `Smoke`, `Demo`,
+  * `Explain` and the benchmark all take their session from here, so the
+  * session that is benchmarked is the one that is verified and tested.
+  * Query builders rely on the functions registered below.
   *
   * Posture (SURVEY.md §4): UTC session time zone for oracle parity, AQE on
   * (skew-join splitting + shuffle-partition coalescing at scale),
@@ -29,16 +29,7 @@ object SparkEnv {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // engine functions + optimizer rewrites are part of the standard session
     graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.registerOptimizations(spark)
-    spark
-  }
-
-  /** Apply runtime-settable engine confs to an externally built session. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark
   }
 }

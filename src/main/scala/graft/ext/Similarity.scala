@@ -28,8 +28,8 @@ object Similarity {
     * via the native codegen'd ArrayDot expression — identical fold order to
     * the declarative `aggregate(zip_with(...))` form (kept below for
     * reference/tests) but compiled instead of interpreted.
-    * Callers must have run `GraftFunctions.register(spark)` (all SparkEntry
-    * queries and the FeatureStore paths do). */
+    * Needs `graft_dot` registered on the session (`SparkEnv.session` does
+    * it; other sessions call `GraftFunctions.register(spark)`). */
   def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.graftDot(a, b)
 

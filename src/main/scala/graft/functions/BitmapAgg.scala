@@ -339,8 +339,9 @@ case class BitmapCount(child: Expression)
 
 /** Serialized-bitmap INTERSECTION returning a serialized bitmap — the
   * composing sibling of [[BitmapAndCount]]: chaining it answers n-way
-  * intersections (|A∩B∩C| = bitmap_count(bitmap_and(bitmap_and(a,b),c)))
-  * that pairwise counts alone cannot, completing the sketch algebra
+  * intersections (|A∩B∩C| = bitmap_and_count(bitmap_and(a,b),c), which
+  * skips serializing the outermost intersection) that pairwise counts
+  * alone cannot, completing the sketch algebra
   * (build / OR-merge / AND / count / contains). Canonical output bytes:
   * empty pages are dropped, so equal sets serialize equally. */
 case class BitmapAnd(left: Expression, right: Expression)

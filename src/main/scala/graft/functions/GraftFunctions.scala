@@ -1,16 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registration + Column-level access for the custom Catalyst functions.
   *
-  * Two registration paths:
-  *  - `GraftExtensions` for `SparkSession.builder.withExtensions(...)` /
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` (cluster conf);
-  *  - `register(spark)` for an already-built session (idempotent).
+  * `register(spark)` installs every function on a built session
+  * (idempotent); `SparkEnv.session` calls it on every session it returns.
   * Column helpers go through `call_function`, so `.over(window)` etc. work
   * like any built-in.
   */
@@ -151,42 +147,4 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("graft_word_stats", c,
       org.apache.spark.sql.functions.array(
         stopwords.map(org.apache.spark.sql.functions.lit): _*))
-
-  /** Runtime-session path for the optimizer rewrites (builder path =
-    * GraftExtensions). Idempotent. */
-  def registerOptimizations(spark: SparkSession): Unit = {
-    val rules = Seq(graft.plans.RewriteSetSize, graft.plans.RewriteDotProduct,
-      graft.plans.RewriteBitmapFusion)
-    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
-  }
-}
-
-/** `spark.sql.extensions` entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("distinct_count_exact"),
-      new ExpressionInfo(classOf[DistinctCountAgg].getName, "distinct_count_exact"),
-      (exprs: Seq[Expression]) => DistinctCountAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ascii_fingerprint"),
-      new ExpressionInfo(classOf[AsciiFingerprint].getName, "ascii_fingerprint"),
-      (exprs: Seq[Expression]) => AsciiFingerprint(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => ArrayDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))))
-    // optimizer rewrites: size(collect_set(x)) -> distinct_count_exact(x);
-    // declarative aggregate(zip_with(a,b,*),0.0,+) -> graft_dot(a,b)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteSetSize)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteDotProduct)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteBitmapFusion)
-  }
 }

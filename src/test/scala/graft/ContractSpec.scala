@@ -124,4 +124,23 @@ class ContractSpec extends SparkSpec {
         "KnifeEdgeSpec probe (or exact re-expression) plus this pin updated: " +
         drift.mkString("; "))
   }
+
+  test("every main session comes from SparkEnv.session") {
+    // one factory, so the session that is benchmarked (Bench, perfbench)
+    // is the one that is verified (Verify) and tested (TestSpark): a
+    // second builder drifts in confs or registered functions unseen
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val found = walk(root).flatMap { f =>
+      val stripped = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//.*", "")
+      Seq.fill("""SparkSession\s*\.\s*builder\b""".r.findAllIn(stripped).size)(f.getName)
+    }
+    assert(found == Seq("SparkEnv.scala"),
+      s"SparkSession.builder call sites: ${found.mkString(", ")}")
+  }
 }

@@ -49,29 +49,6 @@ class FunctionsSpec extends SparkSpec {
       .filter($"fp" =!= $"fp2").count() == 0)
   }
 
-  test("RewriteSetSize: size(collect_set) plans as distinct_count_exact, same values") {
-    GraftFunctions.registerOptimizations(spark)
-    val ev = Tables.events(spark, sf)
-    val agg = ev.groupBy($"user_id")
-      .agg(size(collect_set($"event_type")).as("k"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts_us")
-      .rangeBetween(-3600000000L, 0)
-    val win = ev.select($"event_id", $"user_id",
-      size(collect_set($"props").over(w)).as("k"))
-    for (df <- Seq(agg, win)) {
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("distinct_count_exact"), optimized.take(800))
-      assert(!optimized.contains("collect_set"), optimized.take(800))
-    }
-    // values must equal the unrewritten evaluation (rule disabled via
-    // excludedRules is not possible for extraOptimizations, so compare
-    // against the semantically-equal built-in count_distinct path)
-    val expect = ev.groupBy($"user_id")
-      .agg(countDistinct($"event_type").cast("int").as("k"))
-    assert(agg.except(expect).count() == 0 && expect.except(agg).count() == 0)
-  }
-
   test("q84 regex expressions extract digits (fixtures are digit-free)") {
     val df = Seq((1L, "order 42 and 7 items"), (2L, "no digits here"))
       .toDF("doc_id", "text")
@@ -145,60 +122,22 @@ class FunctionsSpec extends SparkSpec {
     assert(withNullElem.collect()(0).isNullAt(0))
   }
 
-  test("RewriteDotProduct: declarative fold plans as graft_dot, same values") {
-    GraftFunctions.register(spark)
-    GraftFunctions.registerOptimizations(spark)
-    val emb = Tables.embeddings(spark, sf).limit(100)
-    val decl = emb.select(
-      graft.ext.Similarity.dotDeclarative($"embedding", $"embedding").as("d"))
-    val optimized = decl.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("graft_dot"), optimized.take(800))
-    assert(!optimized.contains("aggregate("), optimized.take(800))
-    // and through SQL text (no Column-helper involvement at all)
-    emb.createOrReplaceTempView("emb_rdp")
-    val sqlDecl = spark.sql(
-      """SELECT aggregate(zip_with(embedding, embedding,
-        |         (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-        |       0.0D, (acc, v) -> acc + v) AS d FROM emb_rdp""".stripMargin)
-    assert(sqlDecl.queryExecution.optimizedPlan.toString.contains("graft_dot"))
-    // bit-identical to the direct native call
-    val native = emb.select(
-      GraftFunctions.graftDot($"embedding", $"embedding").as("d"))
-    assert(decl.exceptAll(native).count() == 0 &&
-      native.exceptAll(decl).count() == 0)
-    // NOT rewritten when the multiply is float-precision (different rounding)
-    val floatMul = spark.sql(
-      """SELECT aggregate(zip_with(embedding, embedding, (x, y) -> x * y),
-        |       0.0D, (acc, v) -> acc + CAST(v AS DOUBLE)) AS d
-        |FROM emb_rdp""".stripMargin)
-    assert(!floatMul.queryExecution.optimizedPlan.toString.contains("graft_dot"))
-  }
-
-  test("RewriteBitmapFusion: count(and(a,b)) plans as bitmap_and_count, " +
-    "same values; chained AND keeps only the outer count fused") {
-    GraftFunctions.register(spark)
-    GraftFunctions.registerOptimizations(spark)
-    val df = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 30L), (3L, 10L))
-      .toDF("g", "v")
-    val sketches = df.groupBy($"g")
-      .agg(GraftFunctions.bitmapSketch($"v").as("bm"))
-    val a = sketches.filter($"g" === 1L).select($"bm".as("a"))
-    val b = sketches.filter($"g" === 2L).select($"bm".as("b"))
-    val q = a.crossJoin(b).select(
-      GraftFunctions.bitmapCount(GraftFunctions.bitmapAnd($"a", $"b"))
-        .as("n"))
-    val plan = q.queryExecution.optimizedPlan.toString
-    assert(plan.contains("bitmap_and_count") && !plan.contains("bitmap_count("),
-      plan)
-    assert(q.as[Long].head() === 1L) // {10,20} ∩ {10,30} = {10}
-    val c = sketches.filter($"g" === 3L).select($"bm".as("c"))
-    val q3 = a.crossJoin(b).crossJoin(c).select(
-      GraftFunctions.bitmapCount(GraftFunctions.bitmapAnd(
-        GraftFunctions.bitmapAnd($"a", $"b"), $"c")).as("n"))
-    val plan3 = q3.queryExecution.optimizedPlan.toString
-    // fused outermost: and_count(and(a,b), c)
-    assert(plan3.contains("bitmap_and_count(bitmap_and("), plan3)
-    assert(q3.as[Long].head() === 1L)
+  test("bitmap_and_count(a,b) equals bitmap_count(bitmap_and(a,b)), " +
+    "3-way chain too") {
+    import GraftFunctions.{bitmapAnd, bitmapAndCount, bitmapCount, bitmapSketch}
+    // 70000 sits on a second 64 Ki-bit page
+    val df = Seq(1L, 2L, 3L, 70000L).map(("a", _)) ++
+      Seq(2L, 3L, 4L, 70000L).map(("b", _)) ++
+      Seq(3L, 5L, 70000L).map(("c", _))
+    val sets = df.toDF("g", "v")
+    def bm(g: String) = sets.filter($"g" === g).agg(bitmapSketch($"v").as(g))
+    val ab = bitmapAnd($"a", $"b")
+    val got = bm("a").crossJoin(bm("b")).crossJoin(bm("c"))
+      .select(
+        bitmapAndCount($"a", $"b"), bitmapCount(ab),
+        bitmapAndCount(ab, $"c"), bitmapCount(bitmapAnd(ab, $"c"))).head()
+    assert(got.getLong(0) === 3L && got.getLong(1) === 3L) // {2, 3, 70000}
+    assert(got.getLong(2) === 2L && got.getLong(3) === 2L) // {3, 70000}
   }
 
   test("typed Aggregator (ExactMoments) equals the SQL sufficient stats " +
@@ -231,8 +170,5 @@ class FunctionsSpec extends SparkSpec {
     val r = spark.sql(
       "SELECT ascii_fingerprint('hello') AS fp").as[Long].collect()(0)
     assert(r > 0)
-    // and via the extensions class on a fresh-config path: the builder hook
-    // exists and is well-formed
-    assert(new graft.functions.GraftExtensions() != null)
   }
 }
