@@ -30,7 +30,8 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   /** events.parquet has shipped with two `ts` physical types across fixture
     * vintages: parquet TIMESTAMP(NANOS) (read as a raw nanos long via the
-    * legacy conf, since Spark's reader otherwise rejects it) and
+    * legacy conf `SparkEnv.session` sets, since Spark's reader otherwise
+    * rejects it) and
     * timestamp[us] (reads as TIMESTAMP / TIMESTAMP_NTZ). We branch on the
     * loaded dtype and normalize both to the same two columns: `ts_us`
     * (epoch microseconds, BIGINT — integer arithmetic, never double
@@ -42,7 +43,6 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
     import org.apache.spark.sql.types.LongType
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) vintage, loaded as raw nanos

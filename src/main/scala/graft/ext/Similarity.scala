@@ -28,8 +28,8 @@ object Similarity {
     * via the native codegen'd ArrayDot expression — identical fold order to
     * the declarative `aggregate(zip_with(...))` form (kept below for
     * reference/tests) but compiled instead of interpreted.
-    * Needs `graft_dot` registered on the session (`SparkEnv.session` does
-    * it; other sessions call `GraftFunctions.register(spark)`). */
+    * Resolves against the `graft_dot` that `SparkEnv.session` registers
+    * on every session. */
   def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.graftDot(a, b)
 

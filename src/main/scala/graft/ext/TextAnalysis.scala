@@ -21,7 +21,6 @@ object TextAnalysis {
     * size/aggregate/array_distinct formulation runs 4 interpreted lambda
     * traversals (CodegenFallback) per row. */
   def tokenStats(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .withColumn("ws", graft.functions.GraftFunctions.wordStats(col("text"), Nil))
       .select(
@@ -51,7 +50,6 @@ object TextAnalysis {
     * compiled pass (graft_word_stats), same values as the declarative
     * size/filter/array_distinct formulation. */
   def qualityScore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .withColumn("ws",
         graft.functions.GraftFunctions.wordStats(col("text"), Stopwords))
@@ -139,7 +137,6 @@ object TextAnalysis {
         lit(0L), (acc, x) => acc + x.cast("long")) % lit(FpP)).as("fp"))
 
   def fingerprint(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(
       col("doc_id"),
       graft.functions.GraftFunctions.asciiFingerprint(col("text")).as("fp"))

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registration + Column-level access for the custom Catalyst functions.
@@ -63,8 +65,14 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit =
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      val registry = spark.sessionState.functionRegistry
+      // Spark ships a built-in bitmap_count over its own bitmap format;
+      // graft's replaces it on purpose, so drop it first rather than log
+      // the "replaced a previously registered function" WARN that flags
+      // a second registration
+      val id = FunctionIdentifier(name)
+      if (FunctionRegistry.builtin.functionExists(id)) registry.dropFunction(id)
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
 
   def distinctCountExact(c: Column): Column =

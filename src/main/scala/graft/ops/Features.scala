@@ -65,8 +65,6 @@ object Features {
   /** The full 17-column feature view; one output row per input event row
     * (reference grain — duplicate (customer, t) rows are preserved, SURVEY §7.6). */
   def featureView(events: DataFrame): DataFrame = {
-    // idempotent; needed for the distinct_count_exact window aggregate below
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val base = eventFrame(events)
     val byUser = Window.partitionBy(col("user_id"))
     def frame(us: Long) =

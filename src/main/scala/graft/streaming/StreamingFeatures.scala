@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Tables
 
 /** M5 — Structured Streaming incremental materialization (SURVEY.md §2.8).
@@ -17,6 +19,10 @@ import graft.Tables
   * (`tumblingAgg`): re-aggregation per micro-batch over watermarked state —
   * chosen over flatMapGroupsWithState per SURVEY §7.10 (simpler, and
   * batch/stream parity is testable, see StreamingSpec).
+  *
+  * Every stream reads its events through [[eventStream]]; every sink runs
+  * through [[foreachBatchSink]], and every weekly sketch sink merges through
+  * [[mergeWeeks]].
   */
 object StreamingFeatures {
 
@@ -25,12 +31,106 @@ object StreamingFeatures {
     * legacy TIMESTAMP(NANOS) loads as a raw nanos LongType (`DIV 1000`);
     * current timestamp[us] loads as TIMESTAMP/TIMESTAMP_NTZ
     * (`unix_micros`, identity under the UTC session). */
-  private def tsUsExpr(
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Column =
+  private def tsUsExpr(schema: StructType): org.apache.spark.sql.Column =
     schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts DIV 1000L")
+      case LongType => expr("ts DIV 1000L")
       case _ => unix_micros(col("ts").cast("timestamp"))
     }
+
+  /** The events file source over `eventsDir` (a DIRECTORY of events-schema
+    * parquet files — FileStreamSource rejects bare files), with the schema
+    * the batch loader resolves for it. `maxFilesPerTrigger` > 0 splits a
+    * backlog into several micro-batches (the replay path). */
+  private def eventStream(spark: SparkSession, eventsDir: String,
+                          maxFilesPerTrigger: Int = 0): (StructType, DataFrame) = {
+    val schema = Tables.parquet(spark, eventsDir).schema
+    val reader = spark.readStream.schema(schema)
+    (schema, (if (maxFilesPerTrigger > 0)
+      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
+      .parquet(eventsDir))
+  }
+
+  /** `ts_us` plus the watermarkable event-time column `ts_t`. */
+  private def withEventTime(ev: DataFrame, schema: StructType): DataFrame =
+    ev.withColumn("ts_us", tsUsExpr(schema))
+      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+
+  /** Drain everything available in `raw` through `apply(batch, batchId)`,
+    * one call per micro-batch. With `checkpointDir` the file-source offsets
+    * survive a restart, which then resumes at the first unprocessed file;
+    * without it every run reprocesses the whole backlog. foreachBatch is
+    * at-least-once either way: a crash between `apply` and the offset
+    * commit replays that batchId. */
+  private def foreachBatchSink(raw: DataFrame, checkpointDir: Option[String])(
+      apply: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = raw.writeStream
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+    checkpointDir.foreach(writer.option("checkpointLocation", _))
+    writer.foreachBatch((batch: Dataset[Row], batchId: Long) => apply(batch, batchId))
+      .start()
+  }
+
+  /** A micro-batch with `ts_us` and its event `week` (epoch-micros DIV one
+    * week), the partition key of every weekly sketch store. */
+  private def withWeek(batch: DataFrame, schema: StructType): DataFrame =
+    batch.withColumn("ts_us", tsUsExpr(schema))
+      .withColumn("week", expr("ts_us DIV 604800000000"))
+
+  /** The merge every weekly sketch store runs per micro-batch. `part` holds
+    * the batch's own partial sketches keyed by `week`; `combine(fresh,
+    * stored)` folds them into the stored rows of the same weeks, both with
+    * `part`'s columns, and returns the merged rows of those weeks.
+    *
+    *  - Touched weeks only: the store is read for the weeks `part` touches
+    *    (a broadcast semi-join), and a dynamic partition overwrite rewrites
+    *    just those week directories. Fact rows are read once ever, so the
+    *    work per batch is O(batch), and later rollups merge stored sketches
+    *    without raw data.
+    *  - `part` is materialized once: it feeds both the semi-join and the
+    *    merge, and un-materialized each consumer re-plans the batch's
+    *    aggregation and scans its source files again.
+    *  - Replay guard, for algebras that are not idempotent (`batchId`
+    *    given): foreachBatch is at-least-once, and a replayed KLL blob or
+    *    counter array would count twice. Every stored row carries the
+    *    `batch_id` that last wrote its week; a week whose stored batch_id is
+    *    >= the incoming batchId is a replay, and every row of it, fresh and
+    *    stored, is left out, so the week is not even rewritten. Weeks are
+    *    guarded independently, so a crash that wrote some weeks of a batch
+    *    re-applies exactly the unwritten ones. The guard assumes batchIds
+    *    are monotone per store, which holds for one checkpoint lineage.
+    *    Replay-absorbing algebras (OR, max, min, set union under an order
+    *    statistic) pass `None` and store no batch_id.
+    *  - Lineage breaks before the overwrite: the merged rows are computed
+    *    from the very partitions the overwrite deletes, so they are
+    *    materialized before the write starts. */
+  private def mergeWeeks(spark: SparkSession, part: DataFrame, storePath: String,
+                         batchId: Option[Long])(
+      combine: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val fresh = part.localCheckpoint()
+    val hPath = new Path(storePath)
+    val merged =
+      if (!hPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(hPath)) fresh
+      else {
+        val frame = fresh.columns.map(col).toSeq
+        val touched = Tables.parquet(spark, storePath)
+          .join(broadcast(fresh.select(col("week"))), Seq("week"), "left_semi")
+        batchId match {
+          case None => combine(fresh, touched.select(frame: _*))
+          case Some(id) =>
+            // two consumers of a few rows: materialize once
+            val stored = touched.localCheckpoint()
+            val replayed = broadcast(stored.filter(col("batch_id") >= id).select(col("week")))
+            combine(fresh.join(replayed, Seq("week"), "left_anti"),
+              stored.join(replayed, Seq("week"), "left_anti").select(frame: _*))
+        }
+      }
+    val out = batchId.fold(merged)(id => merged.withColumn("batch_id", lit(id)))
+      .localCheckpoint()
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    out.write.mode(SaveMode.Overwrite).partitionBy("week").parquet(storePath)
+    spark.catalog.refreshByPath(storePath)
+  }
 
   /** Batch twin: per (event_type, hour bucket) counts and value sums.
     * Integer hour bucket (`ts_us DIV 3600000000`) rather than a window
@@ -60,11 +160,8 @@ object StreamingFeatures {
     * state is one row per (window, type), dropped once the watermark passes
     * window end. */
   def streamSlidingAgg(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val ev = spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir)
+    val ev = withEventTime(raw, schema)
       .withWatermark("ts_t", "1 hour")
       .withColumn("vc", round(coalesce(col("value"), lit(0.0)) * 100).cast("long"))
     ev.groupBy(window(col("ts_t"), "1 hour", "15 minutes"), col("event_type"))
@@ -74,51 +171,17 @@ object StreamingFeatures {
         col("event_type"), col("n_events"), col("value_sum"))
   }
 
-  /** Stream-stream INTERVAL JOIN: clicks in the hour strictly before each
-    * purchase (the streaming twin of the batch range join). Both sides are
-    * watermarked; the time-bound predicate (`c_ts` in [p_ts − 1h, p_ts))
-    * lets Spark expire click state once the watermark passes the bound —
-    * the canonical bounded-state stream join. Inner (not left) because an
-    * outer stream-stream join emits null rows only on watermark advance;
-    * the zero-click case is covered by the batch twin's left join. */
-  def streamStreamClicksBeforePurchase(spark: SparkSession,
-                                       eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    def src = spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("ts_us"),
-        col("ts_t").as("p_t"))
-      .withWatermark("p_t", "1 hour")
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts_us").as("c_ts"),
-        col("ts_t").as("c_t"))
-      .withWatermark("c_t", "2 hours")
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("c_t") >= col("p_t") - expr("INTERVAL 1 HOUR") &&
-        col("c_t") < col("p_t"))
-      .select(col("user_id"), col("event_id"), col("ts_us"), col("c_ts"))
-  }
-
-  /** LEFT-OUTER stream-stream join: every purchase, with its preceding-hour
-    * clicks when they exist, or ONE null-extended row when none arrived.
-    * The outer side is the hard streaming semantics: a purchase can only be
-    * declared click-less once the CLICKS watermark has passed the end of
-    * its match window (c_t < p_t), so null rows emit late, watermark-driven
-    * — and purchases within the watermark delay of end-of-stream stay in
-    * state, never emitted (the spec pins exactly this boundary). State per
-    * side is bounded by the watermark + interval, same as the inner join.
-    */
-  def streamStreamLeftOuterClicks(spark: SparkSession,
-                                  eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    def src = spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+  /** Clicks in the hour strictly before each purchase, as a stream-stream
+    * join of type `joinType`. Both sides are watermarked; the time-bound
+    * predicate (`c_ts` in [p_ts − 1h, p_ts)) lets Spark expire click state
+    * once the watermark passes the bound. Each side is its own file
+    * source. */
+  private def clicksBeforePurchase(spark: SparkSession, eventsDir: String,
+                                   joinType: String): DataFrame = {
+    def src = {
+      val (schema, raw) = eventStream(spark, eventsDir)
+      withEventTime(raw, schema)
+    }
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), col("ts_us"),
         col("ts_t").as("p_t"))
@@ -131,19 +194,38 @@ object StreamingFeatures {
       col("user_id") === col("c_user") &&
         col("c_t") >= col("p_t") - expr("INTERVAL 1 HOUR") &&
         col("c_t") < col("p_t"),
-      "left_outer")
+      joinType)
       .select(col("user_id"), col("event_id"), col("ts_us"), col("c_ts"))
   }
+
+  /** Stream-stream INTERVAL JOIN: clicks in the hour strictly before each
+    * purchase (the streaming twin of the batch range join) — the canonical
+    * bounded-state stream join. Inner (not left) because an outer
+    * stream-stream join emits null rows only on watermark advance; the
+    * zero-click case is covered by the batch twin's left join. */
+  def streamStreamClicksBeforePurchase(spark: SparkSession,
+                                       eventsDir: String): DataFrame =
+    clicksBeforePurchase(spark, eventsDir, "inner")
+
+  /** LEFT-OUTER stream-stream join: every purchase, with its preceding-hour
+    * clicks when they exist, or ONE null-extended row when none arrived.
+    * The outer side is the hard streaming semantics: a purchase can only be
+    * declared click-less once the CLICKS watermark has passed the end of
+    * its match window (c_t < p_t), so null rows emit late, watermark-driven
+    * — and purchases within the watermark delay of end-of-stream stay in
+    * state, never emitted (the spec pins exactly this boundary). State per
+    * side is bounded by the watermark + interval, same as the inner join.
+    */
+  def streamStreamLeftOuterClicks(spark: SparkSession,
+                                  eventsDir: String): DataFrame =
+    clicksBeforePurchase(spark, eventsDir, "left_outer")
 
   /** Streaming exact dedup: dropDuplicates on event_id within the watermark
     * horizon — the streaming twin of batch `distinct()`; state is one key
     * per id, expired by the watermark. */
   def streamDedup(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir)
+    withEventTime(raw, schema)
       .withWatermark("ts_t", "1 hour")
       .dropDuplicates("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"))
@@ -156,42 +238,20 @@ object StreamingFeatures {
     * (streamDedup above) would grow without bound. */
   def streamDedupWithinWatermark(spark: SparkSession, eventsDir: String,
                                  maxFilesPerTrigger: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    withEventTime(raw, schema)
       .withWatermark("ts_t", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"))
   }
 
-  /** Streaming variant of `tumblingAgg` from a file source. `eventsDir` must
-    * be a DIRECTORY of events-schema parquet files (FileStreamSource rejects
-    * bare files) — i.e. a bronze append directory; `complete` output into a
+  /** Streaming variant of `tumblingAgg` from a file source (`eventsDir` is a
+    * bronze append directory, see [[eventStream]]); `complete` output into a
     * memory sink for tests, foreachBatch-upsert in production. */
   def streamTumblingAgg(spark: SparkSession, eventsDir: String,
                         maxFilesPerTrigger: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    // maxFilesPerTrigger splits a backlog into multiple micro-batches —
-    // the replay path (StreamingSpec asserts multi-batch parity with batch)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val ev = raw
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
-      .withWatermark("ts_t", "1 hour")
-    ev.withColumn("hour_bucket", expr("ts_us DIV 3600000000"))
-      .withColumn("vc", round(coalesce(col("value"), lit(0.0)) * 100).cast("long"))
-      .groupBy(col("event_type"), col("hour_bucket"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("vc")) / lit(100.0)).as("value_sum"))
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    tumblingAgg(withEventTime(raw, schema).withWatermark("ts_t", "1 hour"))
   }
 
   /** Run the streaming agg to completion against a static events directory
@@ -236,116 +296,68 @@ object StreamingFeatures {
                               keyPrefix: String = "fs:customer:",
                               checkpointDir: Option[String] = None,
                               maxFilesPerTrigger: Int = 0): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader).parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val touched = batch.select(col("user_id")).distinct()
-        // full history for the touched users (bounded-lookback read at scale)
-        val history = Tables.parquet(spark, eventsDir)
-          .withColumn("ts_us", tsUsExpr(schema))
-          .join(broadcast(touched), Seq("user_id"))
-        val snaps = graft.store.FeatureStore.latestSnapshots(
-          graft.ops.Features.featureView(history))
-        val featureCols = graft.store.FeatureStore.featureNames
-          .filterNot(_ == "user_id").filter(snaps.columns.contains)
-        val keyed = snaps.withColumn("__key",
-          concat(lit(keyPrefix), col("user_id").cast("string")))
-        keyed.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val client = newClient()
-          try it.foreach { row =>
-            val fields = graft.store.KvSink.rowToFields(row, featureCols, Seq("ts_us"))
-            // freshness-guarded for EVERY client implementation — the
-            // replay/out-of-order guarantee must not depend on which
-            // KvClient is plugged in
-            client.hsetIfNewer(row.getAs[String]("__key"), fields)
-          } finally client.close()
-        }
-        ()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val touched = batch.select(col("user_id")).distinct()
+      // full history for the touched users (bounded-lookback read at scale)
+      val history = Tables.parquet(spark, eventsDir)
+        .withColumn("ts_us", tsUsExpr(schema))
+        .join(broadcast(touched), Seq("user_id"))
+      val snaps = graft.store.FeatureStore.latestSnapshots(
+        graft.ops.Features.featureView(history))
+      val featureCols = graft.store.FeatureStore.featureNames
+        .filterNot(_ == "user_id").filter(snaps.columns.contains)
+      val keyed = snaps.withColumn("__key",
+        concat(lit(keyPrefix), col("user_id").cast("string")))
+      keyed.foreachPartition { (it: Iterator[Row]) =>
+        val client = newClient()
+        try it.foreach { row =>
+          val fields = graft.store.KvSink.rowToFields(row, featureCols, Seq("ts_us"))
+          // freshness-guarded for EVERY client implementation — the
+          // replay/out-of-order guarantee must not depend on which
+          // KvClient is plugged in
+          client.hsetIfNewer(row.getAs[String]("__key"), fields)
+        } finally client.close()
       }
-      .start()
+    }
   }
 
   /** INCREMENTAL MERGEABLE-SKETCH MATERIALIZATION: maintain a parquet store
-    * of per-week exact distinct-user bitmap sketches across micro-batches —
-    * each batch builds partial sketches for ITS rows only, ORs them with the
-    * stored sketches of the touched weeks, and rewrites just those week
-    * partitions. The streaming face of the store-sketches-per-cell pattern
-    * (q140/q166): the fact rows are read once ever, counts stay exact under
-    * any batch split because bitmap union is associative and idempotent
-    * (at-least-once replays are absorbed), and any later rollup ORs stored
-    * binaries without touching raw data.
+    * (week, sk) of per-week exact distinct-user bitmap sketches across
+    * micro-batches — each batch builds partial sketches for ITS rows only
+    * and ORs them into the touched weeks ([[mergeWeeks]]). The streaming
+    * face of the store-sketches-per-cell pattern (q140/q166): counts stay
+    * exact under any batch split because bitmap union is associative and
+    * idempotent, and any later rollup ORs stored binaries without touching
+    * raw data.
     *
     * Contrast with streamOnlineMaterialize, which re-reads the touched
     * users' history per batch: a mergeable state needs no history re-read
     * at all — O(batch) work per batch, the incremental ideal.
     *
-    * RESTART RECOVERY: pass `checkpointDir` in production — file-source
-    * offsets live there, so a restarted query resumes at the first
-    * unprocessed file. A LOST checkpoint is also safe (unlike the KV
-    * materialization, which needs offsets for its exactly-once story):
-    * reprocessing any suffix of the backlog only ORs already-absorbed
-    * user ids back into the stored bitmaps — the store converges to the
-    * same sketches. StreamingSpec exercises both paths across real
-    * restarts.
+    * RESTART RECOVERY: pass `checkpointDir` in production — a restarted
+    * query resumes at the first unprocessed file. A LOST checkpoint is also
+    * safe (unlike the KV materialization, which needs offsets for its
+    * exactly-once story): reprocessing any suffix of the backlog only ORs
+    * already-absorbed user ids back into the stored bitmaps — the store
+    * converges to the same sketches. StreamingSpec exercises both paths
+    * across real restarts.
     */
   def streamSketchUpsert(spark: SparkSession, eventsDir: String,
                          storePath: String,
                          maxFilesPerTrigger: Int = 0,
                          checkpointDir: Option[String] = None): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{bitmapMerge, bitmapSketch}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val part = batch
-          .withColumn("ts_us", tsUsExpr(schema))
-          .withColumn("week", expr("ts_us DIV 604800000000"))
-          .groupBy(col("week"))
-          .agg(bitmapSketch(col("user_id")).as("sk"))
-          // materialize the per-week partials ONCE (a handful of rows):
-          // they feed BOTH the touched-weeks semi-join and the union —
-          // un-checkpointed, each consumer re-plans the aggregation and
-          // the batch's source file is scanned twice per micro-batch
-          // (surfaced by the restart test's exact numInputRows pin; at
-          // 100 TB it means every arriving file is read twice)
-          .localCheckpoint()
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(hPath)) {
-          val existing = Tables.parquet(spark, storePath)
-          // only the weeks touched by THIS batch are read and re-merged
-          existing.join(broadcast(part.select(col("week"))), Seq("week"))
-            .unionByName(part)
-            .groupBy(col("week")).agg(bitmapMerge(col("sk")).as("sk"))
-        } else part)
-          // lineage break: the write overwrites partitions being read
-          .localCheckpoint()
-        merged.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("week").parquet(storePath)
-        spark.catalog.refreshByPath(storePath)
-        ()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val part = withWeek(batch, schema)
+        .groupBy(col("week"))
+        .agg(bitmapSketch(col("user_id")).as("sk"))
+      mergeWeeks(spark, part, storePath, None) { (fresh, stored) =>
+        stored.unionByName(fresh)
+          .groupBy(col("week")).agg(bitmapMerge(col("sk")).as("sk"))
       }
-      .start()
+    }
   }
 
   /** INCREMENTAL KLL MATERIALIZATION: maintain a parquet store of per-week
@@ -353,98 +365,46 @@ object StreamingFeatures {
     * — the order-statistics sibling of [[streamSketchUpsert]], completing
     * the streaming face of the sketch algebra (bitmap = distincts, KLL =
     * quantiles). Per batch: partial `kll_sketch` per touched week, blob-
-    * level `kll_merge` with the stored cells, rewrite only those week
-    * partitions. Fact rows are read once ever; any later rollup merges
+    * level `kll_merge` with the stored cells. Any later rollup merges
     * stored blobs ([[graft.functions.KllMergeAgg]]) without raw data.
     *
     * DELIVERY CONTRACT — the honest contrast with the bitmap path: KLL
     * merge is NOT idempotent (items carry weight; a replayed blob doubles
-    * n), so the store carries a per-week `batch_id` high-water mark to make
-    * the SINK idempotent where the source cannot be. foreachBatch is
-    * at-least-once even with a checkpoint: a crash between the partition
-    * overwrite and the offset commit replays that batchId on restart. The
-    * guard: a batch's partial for week w is applied ONLY if the stored
-    * batch_id for w is < the current batchId (weeks are independently
-    * guarded, so a crash mid-overwrite that wrote some weeks but not others
-    * re-applies exactly the unwritten ones). ALWAYS pass `checkpointDir` in
-    * production — the guard assumes batchIds are monotone per store, which
-    * holds for one checkpoint lineage. REMAINING WINDOW, stated honestly:
-    * after a checkpoint LOSS batchIds restart at 0, so a replayed backlog is
-    * REFUSED (stored high-water marks dominate) rather than double-counted —
-    * the store stays exact for the old data, but genuinely NEW files that
-    * land in those low-numbered batches are dropped for already-stored
-    * weeks. Recovery from checkpoint loss is therefore: delete the store
-    * WITH the checkpoint and rebuild both. StreamingSpec pins both the
-    * same-batchId replay no-op and the refused-replay-after-loss behavior.
-    * (The bitmap store needs none of this: OR absorbs replays.)
+    * n), so the store carries the per-week `batch_id` high-water mark of
+    * [[mergeWeeks]] to make the SINK idempotent where the source cannot be.
+    * ALWAYS pass `checkpointDir` in production. REMAINING WINDOW, stated
+    * honestly: after a checkpoint LOSS batchIds restart at 0, so a replayed
+    * backlog is REFUSED (stored high-water marks dominate) rather than
+    * double-counted — the store stays exact for the old data, but genuinely
+    * NEW files that land in those low-numbered batches are dropped for
+    * already-stored weeks. Recovery from checkpoint loss is therefore:
+    * delete the store WITH the checkpoint and rebuild both. StreamingSpec
+    * pins both the same-batchId replay no-op and the refused-replay-after-
+    * loss behavior. (The bitmap store needs none of this: OR absorbs
+    * replays.)
     */
   def streamKllUpsert(spark: SparkSession, eventsDir: String,
                       storePath: String,
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        kllApplyBatch(spark, batch.toDF(), schema, storePath, batchId)
-      }
-      .start()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir)(kllApplyBatch(spark, _, schema, storePath, _))
   }
 
   /** One micro-batch of [[streamKllUpsert]], extracted so the idempotence
     * contract is unit-testable without staging a crash: applying the same
     * (batch, batchId) twice must be a no-op the second time. Store rows are
-    * (week, sk, batch_id) where batch_id is the week's applied high-water
-    * mark; a week whose stored batch_id >= the incoming batchId is a replay
-    * and is left UNTOUCHED (excluded from the dynamic partition overwrite,
-    * so not even rewritten). */
+    * (week, sk, batch_id). */
   private[graft] def kllApplyBatch(spark: SparkSession, batch: DataFrame,
-      schema: org.apache.spark.sql.types.StructType, storePath: String,
-      batchId: Long): Unit = {
+      schema: StructType, storePath: String, batchId: Long): Unit = {
     import graft.functions.GraftFunctions.{kllMerge, kllSketch}
-    val part = batch
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("week", expr("ts_us DIV 604800000000"))
+    val part = withWeek(batch, schema)
       .groupBy(col("week"))
       .agg(kllSketch(col("value").cast("double")).as("sk"))
-      // one materialization per batch: the partials feed both the
-      // touched-weeks semi-join and the union (same double-scan fix
-      // as streamSketchUpsert)
-      .localCheckpoint()
-    val hPath = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged = (if (fs.exists(hPath)) {
-      // only the weeks touched by THIS batch are read (partition pruning
-      // via the broadcast week list); materialized once — the replay
-      // filter and the merge union are two consumers of a few rows
-      val touched = Tables.parquet(spark, storePath)
-        .join(broadcast(part.select(col("week"))), Seq("week"))
-        .localCheckpoint()
-      val replayedWeeks = touched
-        .filter(col("batch_id") >= batchId).select(col("week"))
-      val fresh = part.join(broadcast(replayedWeeks), Seq("week"), "left_anti")
-      touched.filter(col("batch_id") < batchId)
-        .select(col("week"), col("sk"))
-        .unionByName(fresh)
+    mergeWeeks(spark, part, storePath, Some(batchId)) { (fresh, stored) =>
+      stored.unionByName(fresh)
         .groupBy(col("week")).agg(kllMerge(col("sk")).as("sk"))
-    } else part)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint() // lineage break before the in-place overwrite
-    merged.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("week").parquet(storePath)
-    spark.catalog.refreshByPath(storePath)
-    ()
+    }
   }
 
   /** INCREMENTAL CMS MATERIALIZATION: maintain a parquet store of per-week
@@ -453,71 +413,34 @@ object StreamingFeatures {
     * KLL = quantiles, CMS = per-key counts). Per batch: partial
     * `cms_sketch` per touched week, elementwise-ADD merge with the stored
     * counter arrays (`zip_with` — codegen, no custom merge aggregate
-    * needed for the two-sided cell merge), rewrite only those week
-    * partitions. Counter addition is NOT idempotent (same failure algebra
-    * as KLL weights), so the store carries the SAME per-week `batch_id`
-    * high-water mark as [[streamKllUpsert]] — replays are refused
-    * week-by-week, and recovery from checkpoint loss is
+    * needed for the two-sided cell merge). Counter addition is NOT
+    * idempotent (same failure algebra as KLL weights), so the store carries
+    * the SAME per-week `batch_id` high-water mark as [[streamKllUpsert]] —
+    * replays are refused week-by-week, and recovery from checkpoint loss is
     * delete-store-and-rebuild. */
   def streamCmsUpsert(spark: SparkSession, eventsDir: String,
                       storePath: String,
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cmsApplyBatch(spark, batch.toDF(), schema, storePath, batchId)
-      }
-      .start()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir)(cmsApplyBatch(spark, _, schema, storePath, _))
   }
 
   /** One micro-batch of [[streamCmsUpsert]] — the [[kllApplyBatch]] shape
     * with a join+zip_with cell merge instead of a merge aggregate. */
   private[graft] def cmsApplyBatch(spark: SparkSession, batch: DataFrame,
-      schema: org.apache.spark.sql.types.StructType, storePath: String,
-      batchId: Long): Unit = {
+      schema: StructType, storePath: String, batchId: Long): Unit = {
     import graft.functions.GraftFunctions.cmsSketch
-    val part = batch
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("week", expr("ts_us DIV 604800000000"))
+    val part = withWeek(batch, schema)
       .groupBy(col("week"))
       .agg(cmsSketch(col("user_id").cast("string")).as("sk"))
-      .localCheckpoint() // one materialization: feeds semi-join AND merge
-    val hPath = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged = (if (fs.exists(hPath)) {
-      val touched = Tables.parquet(spark, storePath)
-        .join(broadcast(part.select(col("week"))), Seq("week"))
-        .localCheckpoint()
-      val replayedWeeks = touched
-        .filter(col("batch_id") >= batchId).select(col("week"))
-      val fresh = part.join(broadcast(replayedWeeks), Seq("week"), "left_anti")
-      fresh
-        .join(touched.filter(col("batch_id") < batchId)
-          .select(col("week"), col("sk").as("sk_store")), Seq("week"), "left")
+    mergeWeeks(spark, part, storePath, Some(batchId)) { (fresh, stored) =>
+      fresh.join(stored.withColumnRenamed("sk", "sk_store"), Seq("week"), "left")
         .select(col("week"),
           when(col("sk_store").isNull, col("sk"))
-            .otherwise(zip_with(col("sk_store"), col("sk"),
-              (a, b) => a + b)).as("sk"))
-    } else part)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint() // lineage break before the in-place overwrite
-    merged.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("week").parquet(storePath)
-    spark.catalog.refreshByPath(storePath)
-    ()
+            .otherwise(zip_with(col("sk_store"), col("sk"), (a, b) => a + b))
+            .as("sk"))
+    }
   }
 
   /** INCREMENTAL HLL MATERIALIZATION: maintain a parquet store of per-week
@@ -535,48 +458,23 @@ object StreamingFeatures {
                       storePath: String,
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val h = graft.ext.Dedup.contentId(col("user_id").cast("string"))
-        val part = batch
-          .withColumn("ts_us", tsUsExpr(schema))
-          .select(expr("ts_us DIV 604800000000").as("week"),
-            (h % 256L).as("j"),
-            (h.cast("long") / lit(256L)).cast("long").as("w"))
-          .select(col("week"), col("j"),
-            when(col("w") === 0L, lit(41L))
-              .otherwise(lit(41L) - length(bin(col("w"))).cast("long"))
-              .as("m_j"))
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val h = graft.ext.Dedup.contentId(col("user_id").cast("string"))
+      val part = withWeek(batch, schema)
+        .select(col("week"),
+          (h % 256L).as("j"),
+          (h.cast("long") / lit(256L)).cast("long").as("w"))
+        .select(col("week"), col("j"),
+          when(col("w") === 0L, lit(41L))
+            .otherwise(lit(41L) - length(bin(col("w"))).cast("long"))
+            .as("m_j"))
+        .groupBy(col("week"), col("j")).agg(max(col("m_j")).as("m_j"))
+      mergeWeeks(spark, part, storePath, None) { (fresh, stored) =>
+        stored.unionByName(fresh)
           .groupBy(col("week"), col("j")).agg(max(col("m_j")).as("m_j"))
-          .localCheckpoint() // feeds the touched-weeks semi-join AND merge
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(hPath)) {
-          Tables.parquet(spark, storePath)
-            .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
-            .select(col("week"), col("j"), col("m_j"))
-            .unionByName(part)
-            .groupBy(col("week"), col("j")).agg(max(col("m_j")).as("m_j"))
-        } else part)
-          .localCheckpoint() // lineage break before the in-place overwrite
-        merged.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("week").parquet(storePath)
-        spark.catalog.refreshByPath(storePath)
-        ()
       }
-      .start()
+    }
   }
 
   /** INCREMENTAL THETA/KMV MATERIALIZATION: maintain a parquet store of
@@ -598,50 +496,22 @@ object StreamingFeatures {
                         storePath: String, k: Int = 64,
                         maxFilesPerTrigger: Int = 0,
                         checkpointDir: Option[String] = None): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    def kSmallest(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    def kSmallest(df: DataFrame): DataFrame =
       df.withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("week")).orderBy(col("hv").asc)))
         .filter(col("rn") <= k + 1)
         .select(col("week"), col("hv"))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val h = graft.ext.Dedup.contentId(col("user_id").cast("string"))
-        val part = kSmallest(batch
-          .withColumn("ts_us", tsUsExpr(schema))
-          .select(expr("ts_us DIV 604800000000").as("week"),
-            h.cast("long").as("hv"))
-          .distinct())
-          .localCheckpoint() // feeds the touched-weeks semi-join AND merge
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(hPath)) {
-          kSmallest(Tables.parquet(spark, storePath)
-            .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
-            .select(col("week"), col("hv"))
-            .unionByName(part)
-            .distinct())
-        } else part)
-          .localCheckpoint() // lineage break before the in-place overwrite
-        merged.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("week").parquet(storePath)
-        spark.catalog.refreshByPath(storePath)
-        ()
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val h = graft.ext.Dedup.contentId(col("user_id").cast("string"))
+      val part = kSmallest(withWeek(batch, schema)
+        .select(col("week"), h.cast("long").as("hv"))
+        .distinct())
+      mergeWeeks(spark, part, storePath, None) { (fresh, stored) =>
+        kSmallest(stored.unionByName(fresh).distinct())
       }
-      .start()
+    }
   }
 
   /** INCREMENTAL PRIORITY-SAMPLE MATERIALIZATION (Duffield–Lund–Thorup
@@ -663,57 +533,30 @@ object StreamingFeatures {
                            storePath: String, k: Int = 32,
                            maxFilesPerTrigger: Int = 0,
                            checkpointDir: Option[String] = None): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    def topK(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    def topK(df: DataFrame): DataFrame =
       df.withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("week"))
             .orderBy(col("pq").desc, col("event_id").asc)))
         .filter(col("rn") <= k + 1)
         .select(col("week"), col("event_id"), col("w"), col("pq"))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val part = topK(batch
-          .withColumn("ts_us", tsUsExpr(schema))
-          .select(expr("ts_us DIV 604800000000").as("week"),
-            col("event_id"),
-            expr("CAST(round(coalesce(value, 0.0) * 100) AS BIGINT)")
-              .as("w"))
-          .withColumn("ug",
-            (graft.ext.Dedup.contentId(col("event_id").cast("string"))
-              % 1000000L) * 2L + 1L)
-          .withColumn("pq", expr(
-            "CAST(CAST(w AS DECIMAL(38,0)) * 2000000 DIV ug AS BIGINT)"))
-          .distinct())
-          .localCheckpoint() // feeds the touched-weeks semi-join AND merge
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(hPath)) {
-          topK(Tables.parquet(spark, storePath)
-            .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
-            .select(col("week"), col("event_id"), col("w"), col("pq"))
-            .unionByName(part)
-            .distinct())
-        } else part)
-          .localCheckpoint() // lineage break before the in-place overwrite
-        merged.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("week").parquet(storePath)
-        spark.catalog.refreshByPath(storePath)
-        ()
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val part = topK(withWeek(batch, schema)
+        .select(col("week"),
+          col("event_id"),
+          expr("CAST(round(coalesce(value, 0.0) * 100) AS BIGINT)")
+            .as("w"))
+        .withColumn("ug",
+          (graft.ext.Dedup.contentId(col("event_id").cast("string"))
+            % 1000000L) * 2L + 1L)
+        .withColumn("pq", expr(
+          "CAST(CAST(w AS DECIMAL(38,0)) * 2000000 DIV ug AS BIGINT)"))
+        .distinct())
+      mergeWeeks(spark, part, storePath, None) { (fresh, stored) =>
+        topK(stored.unionByName(fresh).distinct())
       }
-      .start()
+    }
   }
 
   /** Weekly subset-sum estimates from a [[streamPriorityUpsert]] store,
@@ -783,49 +626,23 @@ object StreamingFeatures {
                           storePath: String,
                           maxFilesPerTrigger: Int = 0,
                           checkpointDir: Option[String] = None): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
     import graft.ext.Dedup
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val h = Dedup.contentId(col("user_id").cast("string"))
-        val part = batch
-          .withColumn("ts_us", tsUsExpr(schema))
-          .select(expr("ts_us DIV 604800000000").as("week"),
-            h.cast("long").as("hv"))
-          .select(col("week"), posexplode(array((0 until Dedup.NumHashes)
-            .map(j => (lit(Dedup.hashA(j)) * col("hv") +
-              lit(Dedup.hashB(j))) % lit(Dedup.P)): _*)))
-          .select(col("week"), col("pos").cast("long").as("j"),
-            col("col").as("mh"))
-          .groupBy(col("week"), col("j")).agg(min(col("mh")).as("minh"))
-          .localCheckpoint() // feeds the touched-weeks semi-join AND merge
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val merged = (if (fs.exists(hPath)) {
-          Tables.parquet(spark, storePath)
-            .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
-            .select(col("week"), col("j"), col("minh"))
-            .unionByName(part)
-            .groupBy(col("week"), col("j")).agg(min(col("minh")).as("minh"))
-        } else part)
-          .localCheckpoint() // lineage break before the in-place overwrite
-        merged.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("week").parquet(storePath)
-        spark.catalog.refreshByPath(storePath)
-        ()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir) { (batch, _) =>
+      val h = Dedup.contentId(col("user_id").cast("string"))
+      val part = withWeek(batch, schema)
+        .select(col("week"), h.cast("long").as("hv"))
+        .select(col("week"), posexplode(array((0 until Dedup.NumHashes)
+          .map(j => (lit(Dedup.hashA(j)) * col("hv") +
+            lit(Dedup.hashB(j))) % lit(Dedup.P)): _*)))
+        .select(col("week"), col("pos").cast("long").as("j"),
+          col("col").as("mh"))
+        .groupBy(col("week"), col("j")).agg(min(col("mh")).as("minh"))
+      mergeWeeks(spark, part, storePath, None) { (fresh, stored) =>
+        stored.unionByName(fresh)
+          .groupBy(col("week"), col("j")).agg(min(col("minh")).as("minh"))
       }
-      .start()
+    }
   }
 
   /** Adjacent-week Jaccard estimates from a [[streamMinhashUpsert]] store,
@@ -865,11 +682,8 @@ object StreamingFeatures {
                        gapUs: Long): org.apache.spark.sql.Dataset[ClosedSession] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val ev = spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir)
+    val ev = withEventTime(raw, schema)
       .withWatermark("ts_t", "1 hour")
       .withColumn("cents",
         round(coalesce(col("value"), lit(0.0)) * 100).cast("long"))
@@ -925,9 +739,8 @@ object StreamingFeatures {
       : org.apache.spark.sql.Dataset[UserTotals] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val ev = spark.readStream.schema(schema).parquet(eventsDir)
+    val (schema, raw) = eventStream(spark, eventsDir)
+    val ev = raw
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("cents",
         when(col("event_type") =!= "error",
@@ -980,11 +793,8 @@ object StreamingFeatures {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val ev = spark.readStream.schema(schema).parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir)
+    val ev = withEventTime(raw, schema)
       .filter(col("event_type").isin("click", "purchase"))
       .withWatermark("ts_t", delay)
       .select(col("user_id").as[Long], col("ts_us").as[Long],
@@ -1066,12 +876,8 @@ object StreamingFeatures {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val ev = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    val ev = raw
       .filter(col("event_type") === "purchase")
       .withColumn("ts_us", tsUsExpr(schema))
       .withColumn("cents", round(coalesce(col("value"), lit(0.0)) * 100)
@@ -1138,14 +944,8 @@ object StreamingFeatures {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val ev = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-      .withColumn("ts_us", tsUsExpr(schema))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    val ev = withEventTime(raw, schema)
       .withWatermark("ts_t", "1 hour")
       .select(col("user_id").as[Long], col("ts_us").as[Long])
       .as[(Long, Long)]
@@ -1203,8 +1003,7 @@ object StreamingFeatures {
     * per-week bucket counts (week, b_id, lb, c) over event VALUE cents.
     * Bucket counts are an additive commutative monoid — merge = per-bucket
     * sum — which is NOT replay-idempotent, so the store carries the
-    * per-week `batch_id` high-water mark and the merge REFUSES any batch
-    * whose id does not exceed a touched week's mark (the
+    * per-week `batch_id` high-water mark of [[mergeWeeks]] (the
     * [[streamCmsUpsert]]/[[kllApplyBatch]] crash-window discipline).
     * Values below 8 cents get exact singleton buckets (b_id = v < 24 —
     * still monotone below the log-linear lane, which starts at
@@ -1215,33 +1014,17 @@ object StreamingFeatures {
                       storePath: String,
                       maxFilesPerTrigger: Int = 0,
                       checkpointDir: Option[String] = None): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, eventsDir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader)
-      .parquet(eventsDir)
-    val writer = raw.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        hdrApplyBatch(spark, batch.toDF(), schema, storePath, batchId)
-      }
-      .start()
+    val (schema, raw) = eventStream(spark, eventsDir, maxFilesPerTrigger)
+    foreachBatchSink(raw, checkpointDir)(hdrApplyBatch(spark, _, schema, storePath, _))
   }
 
   /** One micro-batch of [[streamHdrUpsert]] — the [[cmsApplyBatch]] shape
-    * with per-bucket counter addition (full-outer within touched weeks:
-    * store buckets absent from the batch must survive the merge). */
+    * with per-bucket counter addition (store buckets absent from the batch
+    * survive the merge). */
   private[graft] def hdrApplyBatch(spark: SparkSession, batch: DataFrame,
-      schema: org.apache.spark.sql.types.StructType, storePath: String,
-      batchId: Long): Unit = {
-    val part = batch
-      .withColumn("ts_us", tsUsExpr(schema))
-      .selectExpr("ts_us DIV 604800000000 AS week",
-        "CAST(round(value * 100) AS BIGINT) AS v")
+      schema: StructType, storePath: String, batchId: Long): Unit = {
+    val part = withWeek(batch, schema)
+      .selectExpr("week", "CAST(round(value * 100) AS BIGINT) AS v")
       .filter(col("v") >= 1L)
       .selectExpr("week", "v",
         "CAST(length(bin(v)) - 1 AS INT) AS e")
@@ -1254,33 +1037,11 @@ object StreamingFeatures {
           "shiftleft(CAST(1 AS BIGINT), e) AS BIGINT), e - 3) END AS lb")
       .groupBy(col("week"), col("b_id"), col("lb"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds the touched-weeks semi-join AND merge
-    val hPath = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged = (if (fs.exists(hPath)) {
-      val touched = Tables.parquet(spark, storePath)
-        .join(broadcast(part.select(col("week")).distinct()), Seq("week"))
-        .localCheckpoint()
-      val replayedWeeks = touched
-        .filter(col("batch_id") >= batchId).select(col("week")).distinct()
-      val fresh = part.join(broadcast(replayedWeeks), Seq("week"),
-        "left_anti")
-      val old = touched.filter(col("batch_id") < batchId)
-        .join(broadcast(fresh.select(col("week")).distinct()), Seq("week"))
-        .select(col("week"), col("b_id"), col("lb"), col("c"))
-      fresh.select(col("week"), col("b_id"), col("lb"), col("c"))
-        .unionByName(old)
+    mergeWeeks(spark, part, storePath, Some(batchId)) { (fresh, stored) =>
+      fresh.unionByName(stored)
         .groupBy(col("week"), col("b_id"), col("lb"))
         .agg(sum(col("c")).as("c"))
-    } else part)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint() // lineage break before the in-place overwrite
-    merged.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("week").parquet(storePath)
-    spark.catalog.refreshByPath(storePath)
-    ()
+    }
   }
 
   /** Weekly quantile estimates from a [[streamHdrUpsert]] store: for each

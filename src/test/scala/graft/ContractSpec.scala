@@ -129,18 +129,50 @@ class ContractSpec extends SparkSpec {
     // one factory, so the session that is benchmarked (Bench, perfbench)
     // is the one that is verified (Verify) and tested (TestSpark): a
     // second builder drifts in confs or registered functions unseen
+    val found = mainSources().flatMap { case (name, src) =>
+      Seq.fill("""SparkSession\s*\.\s*builder\b""".r.findAllIn(src).size)(name)
+    }
+    assert(found == Seq("SparkEnv.scala"),
+      s"SparkSession.builder call sites: ${found.mkString(", ")}")
+  }
+
+  /** (file name, comment-stripped source) of every main Scala file. */
+  private def mainSources(): Seq[(String, String)] = {
     val root = new java.io.File("src/main")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val found = walk(root).flatMap { f =>
-      val stripped = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    walk(root).map { f =>
+      f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .replaceAll("(?s)/\\*.*?\\*/", "")
         .replaceAll("//.*", "")
-      Seq.fill("""SparkSession\s*\.\s*builder\b""".r.findAllIn(stripped).size)(f.getName)
     }
-    assert(found == Seq("SparkEnv.scala"),
-      s"SparkSession.builder call sites: ${found.mkString(", ")}")
+  }
+
+  test("only SparkEnv.session registers functions and sets nanosAsLong") {
+    // library code runs on sessions SparkEnv.session already set up; a
+    // second register replaces all functions again on every call (one
+    // WARN line per function) and a runtime conf set hides which session
+    // was not built by the factory
+    for (pat <- Seq("""GraftFunctions\s*\.\s*register\s*\(""",
+                    """parquet\.nanosAsLong""")) {
+      val found = mainSources().flatMap { case (name, src) =>
+        Seq.fill(pat.r.findAllIn(src).size)(name)
+      }
+      assert(found == Seq("SparkEnv.scala"), s"$pat: ${found.mkString(", ")}")
+    }
+  }
+
+  test("the streaming sinks share one reader, one foreachBatch and one overwrite") {
+    // every stream reads through eventStream, every sink runs through
+    // foreachBatchSink, and every weekly sketch store merges through
+    // mergeWeeks: a sink that hand-writes its own copy shows up here
+    val src = mainSources().collect { case ("StreamingFeatures.scala", s) => s }
+    assert(src.size == 1)
+    for (pat <- Seq("""\bforeachBatch\b""", """\bpartitionOverwriteMode\b""",
+                    """\breadStream\b""")) {
+      assert(pat.r.findAllIn(src.head).size == 1, pat)
+    }
   }
 }

@@ -140,6 +140,24 @@ class FunctionsSpec extends SparkSpec {
     assert(got.getLong(2) === 2L && got.getLong(3) === 2L) // {3, 70000}
   }
 
+  test("q231 Venn counts on three audiences that differ") {
+    // the fixtures give every viewer a click and a purchase, so all seven
+    // cells are equal there; on these sets a bitmap AND that returned its
+    // left input would read n_abc = 2 instead of 1
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val audiences = Seq("view" -> Seq(1L, 2L, 3L, 4L, 5L),
+      "click" -> Seq(2L, 3L, 6L), "purchase" -> Seq(3L, 5L, 6L, 7L))
+    val dir = java.nio.file.Files.createTempDirectory("venn3").toString
+    audiences.flatMap { case (t, users) => users.map((t, _)) }
+      .toDF("t", "u").crossJoin(raw.limit(1))
+      .withColumn("event_type", $"t")
+      .withColumn("user_id", $"u".cast(raw.schema("user_id").dataType))
+      .select(raw.columns.map(col).toSeq: _*)
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val got = SparkEntry.queries("q231_event_venn3")(spark, dir).head()
+    assert((0 until 7).map(got.getLong) == Seq(5L, 3L, 4L, 2L, 2L, 2L, 1L))
+  }
+
   test("typed Aggregator (ExactMoments) equals the SQL sufficient stats " +
     "and is merge-order exact") {
     import graft.functions.TypedAggs
