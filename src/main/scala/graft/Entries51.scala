@@ -182,10 +182,10 @@ object Entries51 {
     // so it is deterministic under ties.
     Q("q296_bootstrap_ci",
       (s, d) => {
-        // scan-order load (no fan-out): the CI bounds are raw-double sums
-        // whose last ULP depends on summation order — see
-        // Tables.ordersScanOrder
-        val o = Tables.ordersScanOrder(s, d)
+        // replicate sums run over integer cents and divide once, so a mean
+        // is one IEEE division of exact operands under any summation order
+        val o = Tables.orders(s, d)
+          .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
         // ONE md5 per row; replicate b derives its uniform by the shared
         // affine family (hashA/hashB mod P) — 1/32nd the digest cost.
         // The hash MUST be a separate select below the explode: putting
@@ -193,10 +193,10 @@ object Entries51 {
         // non-generator expression into the Project ABOVE the Generate,
         // where the digest runs once per EXPLODED row (32x per order —
         // measured 3.4s -> the fix at sf0.1; the r10 plan audit)
-        val hashed = o.select(col("o_orderpriority"), col("o_totalprice"),
+        val hashed = o.select(col("o_orderpriority"), col("cents"),
           conv(substring(md5(col("o_orderkey").cast("string")), 1, 12),
             16, 10).cast("long").as("h0"))
-        val b = hashed.select(col("o_orderpriority"), col("o_totalprice"),
+        val b = hashed.select(col("o_orderpriority"), col("cents"),
           col("h0"), explode(sequence(lit(0), lit(BootB - 1))).as("b"))
         val h = (col("h0") * (col("b") * 101L + 37L) +
           (col("b") * 577L + 89L)) % graft.ext.Dedup.P
@@ -208,8 +208,8 @@ object Entries51 {
           .otherwise(5L)
         val reps = b.withColumn("w", w)
           .groupBy(col("o_orderpriority"), col("b"))
-          .agg((sum(col("w") * col("o_totalprice")) / sum(col("w")))
-            .as("mean_b"))
+          .agg((sum(col("w") * col("cents")).cast("double") /
+            (sum(col("w")) * 100L).cast("double")).as("mean_b"))
         val ranked = reps.withColumn("rn",
           row_number().over(Window.partitionBy("o_orderpriority")
             .orderBy(col("mean_b").asc, col("b").asc)))
@@ -219,9 +219,10 @@ object Entries51 {
       },
       Some(s"""WITH reps AS (
               |  SELECT o_orderpriority, b,
-              |    sum(w * o_totalprice) / sum(w) AS mean_b
+              |    CAST(CAST(sum(w * cents) AS BIGINT) AS DOUBLE) /
+              |      CAST(CAST(sum(w) AS BIGINT) * 100 AS DOUBLE) AS mean_b
               |  FROM (
-              |    SELECT o_orderpriority, o_totalprice, b,
+              |    SELECT o_orderpriority, cents, b,
               |      CASE
               |        WHEN h < ${PoissonCut(0)} THEN 0
               |        WHEN h < ${PoissonCut(1)} THEN 1
@@ -230,11 +231,12 @@ object Entries51 {
               |        WHEN h < ${PoissonCut(4)} THEN 4
               |        ELSE 5 END AS w
               |    FROM (
-              |      SELECT o_orderpriority, o_totalprice, b,
+              |      SELECT o_orderpriority, cents, b,
               |        (h0 * (b * 101 + 37) + (b * 577 + 89))
               |          % ${graft.ext.Dedup.P} AS h
               |      FROM (
-              |        SELECT o_orderpriority, o_totalprice,
+              |        SELECT o_orderpriority,
+              |          CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
               |          ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)),
               |            1, 12))::BIGINT AS h0
               |        FROM orders)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * hand-placed log lines, so every operator is covered for free.
   *
   * At cluster scale the same numbers arrive through a QueryExecutionListener
-  * into the metrics store; this pull-based form is what Bench/tests use. */
+  * into the metrics store; this pull-based form is used only by MetricsSpec. */
 object Metrics {
 
   case class QueryMetrics(scanRows: Long, outputRows: Long,

@@ -59,19 +59,6 @@ object Tables {
     load(spark, dir, "documents", fanout = true)
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  /** Scan-order orders load — NO fan-out, deliberately. q296's bootstrap
-    * CI is the suite's one output computed as a raw-double sum (every
-    * other money column is integerized to cents first, per the
-    * determinism policy), so its last ULP depends on the partial-sum
-    * grouping: the single-row-group fixture scan always fed the
-    * aggregation in file order, and the DuckDB oracle sums in the same
-    * order. The r13 fan-out would split that into per-partition partial
-    * sums and move the CI bounds by ~1 ulp (measured: 4/5 rows off at
-    * sf0.01) — so the one order-sensitive consumer keeps the serial scan. */
-  private[graft] def ordersScanOrder(spark: SparkSession,
-                                     dir: String): DataFrame =
-    parquet(spark, s"$dir/orders.parquet")
-
   /** `spark.read.parquet(path)` without its schema-inference Spark job.
     *
     * Spark infers a parquet schema from ONE footer — a summary file if the
@@ -182,8 +169,7 @@ object Tables {
     * 3.6 s → 9.1 s, q218 DBSCAN 5.2 s → 7.4 s, and a ~0.3–1 s tax on most
     * simple aggregation queries (q03, q12, q132, q138, q257). The
     * documents-only split keeps every measured win and none of the
-    * regressions. q296 additionally pins its scan-order orders load — see
-    * [[ordersScanOrder]]. */
+    * regressions. */
   private def load(spark: SparkSession, dir: String, name: String,
                    fanout: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"

@@ -159,8 +159,8 @@ object Similarity {
     val poss = truth.agg(count(lit(1)).as("possible"))
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val nps = broadcast(nprobes.map(_.toLong).toDF("nprobe"))
-    val perNp = cand.join(nps, col("prn") <= col("nprobe"))
+    val nps = nprobes.map(_.toLong).toDF("nprobe")
+    val perNp = cand.join(broadcast(nps), col("prn") <= col("nprobe"))
     val topk = perNp.withColumn("rank", row_number().over(
         Window.partitionBy(col("nprobe"), col("q_id"))
           .orderBy(col("cos").desc, col("n_id").asc)))

@@ -97,70 +97,32 @@ object SqlSurface {
     *                       semantics: top-10 recency cap, support ≥ 2)
     *  - graft_lpa_labels   synchronous label-propagation assignment
     *                       after Entries79.LpaRounds rounds (q453)
-    * The label chain is persisted at registration (lazily — no action
-    * runs here): a SQL consumer referencing graft_lpa_labels several
-    * times (the modularity pattern joins it three ways) shares ONE
-    * InMemoryRelation instead of replanning the whole LPA chain per
-    * reference. */
-  /** The relations the LAST registerGraphViews call persisted — unpersisted
-    * on the next CROSS-DATASET call so repeated registration can't
-    * accumulate pinned session-lifetime blocks across dataset dirs
-    * (ADVICE r12). One entry set at a time, a few refs. */
-  private var graphViewPersists: Seq[DataFrame] = Nil
-  /** Semantic identity of the events plan the current registration was
-    * built from — the same-dataset guard ADVICE r12 asked for (r13):
-    * q459 re-registers on every execution, and unpersist-then-persist
-    * threw the LPA label cache away between the bench's passes (the
-    * whole point of persisting it — measured 3.1 s steady where the
-    * second pass should pay only the modularity joins). Same input plan
-    * → registration is a no-op; different input (another dataset dir)
-    * → rotate the pins as before. */
-  private var graphViewKey: Option[Int] = None
+    * The edges and the label chain are pinned in the session memo (lazily
+    * — no action runs here): a SQL consumer referencing graft_lpa_labels
+    * several times (the modularity pattern joins it three ways) shares ONE
+    * InMemoryRelation, and the next run over the same events reuses it.
+    * The views are per session, so every call registers them again. */
+  def registerGraphViews(spark: SparkSession, events: DataFrame): Unit = {
+    val (edges, labels) = graft.SessionMemo(events, "graph-views") { pin =>
+      val edges = pin(Curation.coengagementPairs(events, 10, 2L)
+        .select(org.apache.spark.sql.functions.col("i1"),
+          org.apache.spark.sql.functions.col("i2")))
+      val sym = pin(edges.selectExpr("i1 AS v", "i2 AS u")
+        .unionByName(edges.selectExpr("i2 AS v", "i1 AS u")))
+      (edges, pin(graft.Entries79.lpaLabels(sym)))
+    }
+    edges.createOrReplaceTempView("graft_coe_edges")
+    labels.createOrReplaceTempView("graft_lpa_labels")
+  }
 
   /** The calibration relation as a temp view (r13 — the SQL-text reach
     * extended to the train-prep calibration family):
     *  - graft_calib_bins   q470's $10-price-bin prefix-sum relation
     *                       (bin, n, s, cs, cw, psp, pwp)
-    * Persisted at registration (lazily) because the PAV max-min SQL
-    * consumes it in three roles (j, k, i) — the same pin q470's DataFrame
-    * form holds; unpersist-on-re-register per the graph-view discipline. */
-  private var calibViewPersists: Seq[DataFrame] = Nil
-
+    * Pinned in the session memo because the PAV max-min SQL consumes it in
+    * three roles (j, k, i) — the same pin q470's DataFrame form holds. */
   def registerCalibrationViews(spark: SparkSession,
-                               events: DataFrame): Unit = {
-    calibViewPersists.foreach(_.unpersist())
-    val pre = graft.Entries85.calibPre(events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pre.createOrReplaceTempView("graft_calib_bins")
-    calibViewPersists = Seq(pre)
-  }
-
-  def registerGraphViews(spark: SparkSession, events: DataFrame): Unit = {
-    // same-dataset re-registration is a no-op: the views and their
-    // (lazily built) caches are already in place and stay warm. The
-    // storageLevel check matters: an external clearCache (Verify's
-    // batched hygiene, the census's per-query clear) strips the persist
-    // markers without this object knowing — then the views must be
-    // re-registered, or they'd compile to the raw un-cached chains.
-    val key = events.queryExecution.analyzed.semanticHash()
-    if (graphViewKey.contains(key) && graphViewPersists.nonEmpty &&
-        graphViewPersists.forall(_.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE)) return
-    graphViewKey = Some(key)
-    // drop the previous registration's pins first: cross-dataset re-runs
-    // no longer leak the old dir's blocks for the session lifetime
-    graphViewPersists.foreach(_.unpersist())
-    val edges = Curation.coengagementPairs(events, 10, 2L)
-      .select(org.apache.spark.sql.functions.col("i1"),
-        org.apache.spark.sql.functions.col("i2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = edges.selectExpr("i1 AS v", "i2 AS u")
-      .unionByName(edges.selectExpr("i2 AS v", "i1 AS u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.createOrReplaceTempView("graft_coe_edges")
-    val labels = graft.Entries79.lpaLabels(sym)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    labels.createOrReplaceTempView("graft_lpa_labels")
-    graphViewPersists = Seq(edges, sym, labels)
-  }
+                               events: DataFrame): Unit =
+    graft.SessionMemo(events, "calib-bins")(_(graft.Entries85.calibPre(events)))
+      .createOrReplaceTempView("graft_calib_bins")
 }

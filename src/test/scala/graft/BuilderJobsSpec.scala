@@ -11,7 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * are computed by its one Spark action. Each builder is first built and
   * run once, so that cross-query memos (the UnigramLm model behind
   * q419/q420/q425, q459's graph views) are warm, as in a benchmark's timed
-  * pass; the count is taken on the second build. */
+  * pass; the count is taken on the second build. The memo's first build
+  * is pinned too: it persists its frames lazily, so a cold build starts no
+  * job either. */
 class BuilderJobsSpec extends SparkSpec {
 
   private val expectedJobs = Seq(
@@ -38,6 +40,14 @@ class BuilderJobsSpec extends SparkSpec {
       ListenerBusDrain(sc)
       jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("the first build of the unigram memo family starts no Spark job") {
+    // a new session has no memo entry, so the first builder call trains
+    val cold = spark.newSession()
+    val got = Seq("q419_unigram_lm", "q420_unigram_encode", "q425_unigram_report")
+      .map(name => name -> jobsIn(s"cold:$name")(SparkEntry.queries(name)(cold, sf)))
+    assert(got.forall(_._2 == 0), s"cold builder job counts: $got")
   }
 
   test("query builders start no Spark job; q309 starts exactly one") {

@@ -164,6 +164,17 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("only SessionMemo decides whether a cross-query value is valid") {
+    // a second hand-written cache shows up as a storage-level or plan-hash
+    // check outside the memo
+    for (pat <- Seq("""\bstorageLevel\b""", """\bsemanticHash\b""")) {
+      val found = mainSources().collect {
+        case (name, src) if pat.r.findFirstIn(src).isDefined => name
+      }
+      assert(found.forall(_ == "SessionMemo.scala"), s"$pat: ${found.mkString(", ")}")
+    }
+  }
+
   test("the streaming sinks share one reader, one foreachBatch and one overwrite") {
     // every stream reads through eventStream, every sink runs through
     // foreachBatchSink, and every weekly sketch store merges through

@@ -34,6 +34,7 @@ class ParallelismInvarianceSpec extends SparkSpec {
     "q129_weighted_sample",    // per-group weighted top-k
     "q158_topk_list",          // ordered list aggregation
     "q314_weighted_reservoir", // hash-keyed reservoir with pinned ties
+    "q296_bootstrap_ci",       // replicate means over integer-cent sums
     // r8 census-persisted queries: a persist() must not freeze a
     // layout-dependent result (it caches whatever the first action saw),
     // so the queries that gained persists + repartitions this round get
