@@ -1,9 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.concurrent.{CountDownLatch, FutureTask}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.BlockDrop
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Fault injection for the cross-query memo: lost blocks, an external
   * `clearCache`, a second session, an input rewritten in place, and two
@@ -71,10 +73,38 @@ class SessionMemoSpec extends SparkSpec {
       Thread.sleep(300)
       pin(input)
     }
-    val other = new java.util.concurrent.FutureTask[DataFrame](() => ask())
+    val other = new FutureTask[DataFrame](() => ask())
     new Thread(other).start()
     val mine = ask()
     assert(other.get() eq mine)
     assert(calls.get == 1 && SessionMemo.builds.get - builds == 1)
+  }
+
+  test("sessions that come and go keep one entry's frames cached") {
+    val counts = (1 to 3).map { n =>
+      val s = spark.newSession()
+      val input = s.range(1000L + n).toDF()
+      SessionMemo(input, "spec:sessions")(_(input)).count()
+      spark.sparkContext.getPersistentRDDs.size
+    }
+    assert(counts.distinct.size == 1, s"persisted RDDs after each session: $counts")
+  }
+
+  test("an entry replaced during its build leaves none of its frames cached") {
+    val s = spark.newSession()
+    val (a, b) = (s.range(7).toDF(), s.range(8).toDF())
+    val (pinned, replaced) = (new CountDownLatch(1), new CountDownLatch(1))
+    val first = new FutureTask[Seq[DataFrame]](() => SessionMemo(a, "spec:replace") { pin =>
+      val early = pin(a)
+      pinned.countDown()
+      replaced.await()
+      Seq(early, pin(a.selectExpr("id + 1 AS id")))
+    })
+    new Thread(first).start()
+    pinned.await()
+    val kept = SessionMemo(b, "spec:replace")(_(b))
+    replaced.countDown()
+    assert(first.get().forall(_.storageLevel == StorageLevel.NONE))
+    assert(kept.storageLevel == StorageLevel.MEMORY_AND_DISK)
   }
 }
