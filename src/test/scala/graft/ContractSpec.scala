@@ -175,6 +175,16 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("the serving edge answers on its own blocking sockets, not the JDK HttpServer") {
+    // the JDK server runs every handler on one dispatcher thread and
+    // writes headers and body apart (about 44 ms per back-to-back
+    // keep-alive predict)
+    val found = mainSources().collect {
+      case (name, src) if src.contains("com.sun.net.httpserver") => name
+    }
+    assert(found.isEmpty, found.mkString(", "))
+  }
+
   test("the streaming sinks share one reader, one foreachBatch and one overwrite") {
     // every stream reads through eventStream, every sink runs through
     // foreachBatchSink, and every weekly sketch store merges through
