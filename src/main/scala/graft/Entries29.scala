@@ -164,25 +164,15 @@ object Entries29 {
     // through the same operator.
     Q("q236_knn_accuracy",
       (s, d) => {
+        import graft.ext.TopK
         val e = Tables.embeddings(s, d)
-        val q = e.filter(col("vec_id") < 500)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("label").as("q_label"))
-        val c = e.select(col("vec_id").as("n_id"),
-          col("embedding").as("n_emb"), col("label").as("n_label"))
-        val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-          .withColumn("cos", graft.ext.Similarity.cosine(col("q_emb"),
-            col("n_emb")))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id").asc)
-        val votes = scored.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 5)
+        val votes = TopK.exact(TopK.allPairs(
+            TopK.vectors(e.filter(col("vec_id") < 500), "q",
+              col("label").as("q_label")),
+            TopK.vectors(e, "n", col("label").as("n_label"))), 5)
           .groupBy(col("q_id"), col("q_label"), col("n_label"))
           .agg(count(lit(1)).as("v"))
-        val wv = Window.partitionBy(col("q_id"))
-          .orderBy(col("v").desc, col("n_label").asc)
-        votes.withColumn("vr", row_number().over(wv))
-          .filter(col("vr") === 1)
+        TopK.rank(votes, Seq("q_id"), "v", "n_label", 1)
           .groupBy(col("q_label").cast("long").as("label"))
           .agg(count(lit(1)).as("n"),
             sum(when(col("n_label") === col("q_label"), 1L).otherwise(0L))

@@ -644,8 +644,7 @@ object Entries75 {
         // checkpointed: the trained quantizer feeds BOTH the corpus
         // assignment and the query probes — train once, not per consumer
         val cent = graft.Explain.localCheckpointWithProvenance(
-          graft.ext.Similarity.kmeansCentroids(emb, 100, 2)
-            .select(col("cluster").as("c_id"), col("centroid").as("c_emb")))
+          graft.ext.Similarity.kmeansCentroids(emb, 100, 2))
         graft.ext.Similarity.ivfSweepWith(emb, cent, 20, 5, Seq(1, 2, 4, 8))
       },
       Some {

@@ -190,68 +190,40 @@ object Entries85 {
   private val nnDescent: Q =
     Q("q468_nn_descent",
       (s, d) => {
-        import graft.ext.Similarity.cosine
+        import graft.ext.TopK
         val emb = Tables.embeddings(s, d)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val cent = emb.filter(col("vec_id") % 100 === 0)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-        val assignW = Window.partitionBy(col("n_id"))
-          .orderBy(col("c_cos").desc, col("c_id").asc)
-        val assigned = emb
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-          .join(broadcast(cent), lit(true))
-          .withColumn("c_cos", cosine(col("n_emb"), col("c_emb")))
-          .withColumn("arn", row_number().over(assignW))
-          .filter(col("arn") === 1)
-          .select(col("n_id"), col("n_emb"), col("c_id"))
+        val assigned = TopK.assign(TopK.vectors(emb, "n"), "n",
+            TopK.centroids(emb, 100))
           // feeds the query cells, the member lists and the exact re-rank
           .persist(StorageLevel.MEMORY_AND_DISK)
+        def asQueries(a: DataFrame): DataFrame = a.select(col("n_id").as("q_id"),
+          col("n_emb").as("q_emb"), col("n_n").as("q_n"), col("c_id"))
         // in-cell exact top-5 for a node set — the shared IVF nprobe=1 list
-        def cellTop5(nodes: DataFrame): DataFrame = {
-          val w = Window.partitionBy(col("src_id"))
-            .orderBy(col("cos").desc, col("n_id").asc)
-          nodes.join(assigned, Seq("c_id"))
-            .filter(col("n_id") =!= col("src_id"))
-            .withColumn("cos", cosine(col("src_emb"), col("n_emb")))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= 5)
-        }
-        val q = assigned.filter(col("n_id") < 20)
-          .select(col("n_id").as("src_id"), col("n_emb").as("src_emb"),
-            col("c_id"))
+        def cellTop5(nodes: DataFrame): DataFrame =
+          TopK.exact(TopK.inLists(nodes, assigned), 5)
+        val q = asQueries(assigned.filter(col("n_id") < 20))
         val n0 = cellTop5(q).persist(StorageLevel.MEMORY_AND_DISK)
         // neighbor-of-neighbor expansion: only the ≤ |Q|·k member lists
-        val mnodes = n0.select(col("n_id")).distinct()
-          .join(assigned, Seq("n_id"))
-          .select(col("n_id").as("src_id"), col("n_emb").as("src_emb"),
-            col("c_id"))
-        val mlists = cellTop5(mnodes)
-          .select(col("src_id").as("m_id"), col("n_id").as("cand"))
-        val cands = n0.select(col("src_id").as("q_id"), col("n_id").as("cand"))
+        val mlists = cellTop5(asQueries(
+            n0.select(col("n_id")).distinct().join(assigned, Seq("n_id"))))
+          .select(col("q_id").as("m_id"), col("n_id"))
+        val cands = n0.select(col("q_id"), col("n_id"))
           .unionByName(
-            n0.select(col("src_id").as("q_id"), col("n_id").as("m_id"))
+            n0.select(col("q_id"), col("n_id").as("m_id"))
               .join(mlists, Seq("m_id"))
-              .select(col("q_id"), col("cand")))
-          .filter(col("cand") =!= col("q_id")).distinct()
-        val rerankW = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id").asc)
+              .select(col("q_id"), col("n_id")))
+          .filter(col("n_id") =!= col("q_id")).distinct()
         // exact re-rank of the candidate set
-        val n1r = cands
-          .join(assigned.select(col("n_id"), col("n_emb")),
-            cands("cand") === col("n_id"))
-          .join(q.select(col("src_id").as("q_id"),
-            col("src_emb").as("q_emb")), Seq("q_id"))
-          .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-          .withColumn("rank", row_number().over(rerankW))
-          .filter(col("rank") <= 5)
+        val n1r = TopK.exact(
+          TopK.explicit(cands, q.drop("c_id"), assigned.drop("c_id")), 5)
         val brute = graft.ext.Similarity
           .bruteForceTopK(emb, 20, 5)
           .select(col("q_id"), col("n_id"), lit(1).as("hit"))
-        val out0 = n0.select(col("src_id").as("q_id"), lit(0).as("round"),
-          col("rank").cast("int").as("rank"), col("n_id"), col("cos"))
-        val out1 = n1r.select(col("q_id"), lit(1).as("round"),
-          col("rank").cast("int").as("rank"), col("n_id"), col("cos"))
-        out0.unionByName(out1)
+        def out(ranked: DataFrame, round: Int): DataFrame =
+          ranked.select(col("q_id"), lit(round).as("round"),
+            col("rank").cast("int").as("rank"), col("n_id"), col("cos"))
+        out(n0, 0).unionByName(out(n1r, 1))
           .join(brute, Seq("q_id", "n_id"), "left_outer")
           .select(col("q_id"), col("round"), col("rank"), col("n_id"),
             col("cos"), coalesce(col("hit"), lit(0)).as("hit"))

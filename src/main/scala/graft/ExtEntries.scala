@@ -548,10 +548,10 @@ object ExtEntries {
 
     // Group-limit: top-3 orders by value per customer (deterministic ties)
     Q("q56_group_topk",
-      (s, d) => TrainPrep.topKPerGroup(
+      (s, d) => graft.ext.TopK.rank(
         Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"),
           col("o_totalprice")),
-        "o_custkey", "o_totalprice", "o_orderkey", 3),
+        Seq("o_custkey"), "o_totalprice", "o_orderkey", 3, "rn"),
       Some("""SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
              |  SELECT o_custkey, o_orderkey, o_totalprice,
              |    CAST(row_number() OVER (PARTITION BY o_custkey

@@ -37,10 +37,10 @@ object Curation {
   }
 
   /** Semantic dedup (SemDeDup shape): assign every embedding to its nearest
-    * deterministic coarse centroid (vec_id % centroidEvery == 0, cos-desc /
-    * id-asc tie-break — the same quantizer as Similarity.ivfTopK), then
-    * drop any vector whose cluster contains a LOWER-id vector with cosine
-    * >= threshold. Returns (vec_id, cluster, keep).
+    * deterministic coarse centroid (`TopK.assign` over
+    * `TopK.centroids(embeddings, centroidEvery)`), then drop any vector
+    * whose cluster contains a LOWER-id vector with cosine >= threshold.
+    * Returns (vec_id, cluster, keep).
     *
     * Scale shape: the pairwise pass is confined within clusters — O(Σ|c|²)
     * instead of O(N²); centroids broadcast; the intra-cluster join shuffles
@@ -48,21 +48,14 @@ object Curation {
     * in place of the deterministic quantizer. */
   def semanticDedup(embeddings: DataFrame, centroidEvery: Int = 100,
                     threshold: Double = 0.4): DataFrame = {
-    val cent = embeddings.filter(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val assignW = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
     // persisted: the centroid assignment (a |vectors|×|centroids| cosine
     // pass + window) feeds three consumers (both sides of the in-cluster
     // pair join and the final keep projection) — uncached it replans per
     // consumer (plan census r8: 6 embedding scans -> 1)
-    val assigned = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(cent), lit(true))
-      .withColumn("c_cos", Similarity.cosine(col("embedding"), col("c_emb")))
-      .withColumn("arn", row_number().over(assignW))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding"), col("c_id").as("cluster"))
+    val assigned = TopK.assign(TopK.vectors(embeddings, "n"), "n",
+        TopK.centroids(embeddings, centroidEvery))
+      .select(col("n_id").as("vec_id"), col("n_emb").as("embedding"),
+        col("c_id").as("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dupOf = assigned.as("x")
       .join(assigned.select(col("cluster"),

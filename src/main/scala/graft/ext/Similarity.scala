@@ -1,13 +1,19 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`Array[Float]` columns) —
   * brute-force cosine top-k as the exact baseline, IVF (coarse-quantizer
-  * probing) as the scale path, and hyperplane-LSH bucketing for near-dup
-  * pair mining.
+  * probing) and PQ (compressed codes) as the scale paths, k-means and
+  * hyperplane-LSH bucketing for near-dup pair mining.
+  *
+  * Every ranked search here is a candidate choice plus [[TopK]] calls:
+  * TopK picks the candidates (all pairs, IVF lists), scores them (exact
+  * cosine with hoisted norms) and ranks them with the one tie-break
+  * (score desc, or distance asc, then id asc); every nearest-centroid
+  * assignment (IVF lists and probes, k-means, PQ codebooks) is its rank
+  * with k = 1.
   *
   * No UDFs: dot products are `zip_with` + sequential `aggregate` folds over
   * the array — codegen'd, and fold ORDER is fixed (left-to-right), so DuckDB
@@ -16,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: brute-force top-k is O(|Q|·N) — linear in corpus size for a
   * fixed query set and embarrassingly parallel (queries broadcast, corpus
-  * partition-scanned; no shuffle until the per-query top-k, which is a
+  * round-robined over the shuffle partitions; the per-query top-k is a
   * partial top-k then merge). IVF cuts the scanned fraction to
   * nprobe/ncentroids. The deterministic pseudo-random hyperplanes replace
   * trained k-means centroids so the oracle can replay them; swap in
@@ -46,63 +52,40 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(norm2(a)) * sqrt(norm2(b)))
 
-  /** Exact brute-force cosine top-k for a fixed query set (vec_id < nQueries).
-    * Rank ties broken by neighbor id. */
-  def bruteForceTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val c = embeddings
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  /** Exact brute-force cosine top-k for a fixed query set (vec_id <
+    * nQueries): [[TopK.exact]] over [[TopK.allPairs]]. */
+  def bruteForceTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame =
+    TopK.exact(TopK.allPairs(queries(embeddings, nQueries),
+        TopK.vectors(embeddings, "n")), k)
       .select(col("q_id"), col("rank").cast("int").as("rank"),
         col("n_id"), col("cos"))
-  }
+
+  /** The query side (q_id, q_emb, q_n) of a fixed query set: vec_id <
+    * nQueries. */
+  private def queries(embeddings: DataFrame, nQueries: Int,
+                      extra: Column*): DataFrame =
+    TopK.vectors(embeddings.filter(col("vec_id") < nQueries), "q", extra: _*)
+
+  /** IVF candidates: each query against the inverted lists of its nprobe
+    * nearest centroids of `cent` (c_id, c_emb), each corpus vector in the
+    * list of its nearest centroid ([[TopK.probe]], [[TopK.assign]]). The
+    * query's probe order is c_rank. */
+  private def ivfLists(embeddings: DataFrame, cent: DataFrame, nQueries: Int,
+                       nprobe: Int): DataFrame =
+    TopK.inLists(TopK.probe(queries(embeddings, nQueries), "q", cent, nprobe),
+      TopK.assign(TopK.vectors(embeddings, "n"), "n", cent))
 
   /** IVF top-k: corpus vectors with vec_id ≡ 0 (mod centroidEvery) act as
-    * coarse centroids (deterministic stand-in for k-means); every vector is
-    * assigned to its nearest centroid (cos desc, centroid id asc); a query
-    * probes its nprobe nearest centroids and scans only those inverted lists.
-    * Approximate — but deterministically so, hence oracle-checkable. */
+    * coarse centroids ([[TopK.centroids]], a deterministic stand-in for
+    * k-means); a query probes its nprobe nearest centroids and reranks only
+    * those inverted lists exactly. Approximate, but deterministically so,
+    * hence oracle-checkable. */
   def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int,
-              centroidEvery: Int, nprobe: Int): DataFrame = {
-    val cent = embeddings.filter(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    // inverted lists: nearest centroid per corpus vector
-    val assignW = Window.partitionBy(col("n_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val assigned = embeddings
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-      .join(broadcast(cent), lit(true))
-      .withColumn("c_cos", cosine(col("n_emb"), col("c_emb")))
-      .withColumn("arn", row_number().over(assignW))
-      .filter(col("arn") === 1)
-      .select(col("n_id"), col("n_emb"), col("c_id"))
-    // probe lists: nprobe nearest centroids per query
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .join(broadcast(cent), lit(true))
-      .withColumn("c_cos", cosine(col("q_emb"), col("c_emb")))
-      .withColumn("prn", row_number().over(probeW))
-      .filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("c_id"))
-    // search only the probed lists
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    assigned.join(probes, Seq("c_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+              centroidEvery: Int, nprobe: Int): DataFrame =
+    TopK.exact(ivfLists(embeddings, TopK.centroids(embeddings, centroidEvery),
+        nQueries, nprobe), k)
       .select(col("q_id"), col("rank").cast("int").as("rank"),
         col("n_id"), col("cos"))
-  }
 
   /** IVF OPERATING-POINT SWEEP: recall@k and candidate-scan cost per
     * nprobe value, in ONE pass over one candidate relation — the tuning
@@ -118,41 +101,17 @@ object Similarity {
     * point. */
   def ivfSweep(embeddings: DataFrame, nQueries: Int, k: Int,
                centroidEvery: Int, nprobes: Seq[Int]): DataFrame =
-    ivfSweepWith(embeddings,
-      embeddings.filter(col("vec_id") % centroidEvery === 0)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb")),
+    ivfSweepWith(embeddings, TopK.centroids(embeddings, centroidEvery),
       nQueries, k, nprobes)
 
   /** [[ivfSweep]] over an ARBITRARY coarse-quantizer frame
     * (c_id, c_emb) — e.g. [[kmeansCentroids]] trained centroids (q432). */
   def ivfSweepWith(embeddings: DataFrame, cent: DataFrame, nQueries: Int,
                    k: Int, nprobes: Seq[Int]): DataFrame = {
-    val maxP = nprobes.max
-    val assignW = Window.partitionBy(col("n_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val assigned = embeddings
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-      .join(broadcast(cent), lit(true))
-      .withColumn("c_cos", cosine(col("n_emb"), col("c_emb")))
-      .withColumn("arn", row_number().over(assignW))
-      .filter(col("arn") === 1)
-      .select(col("n_id"), col("n_emb"), col("c_id"))
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .join(broadcast(cent), lit(true))
-      .withColumn("c_cos", cosine(col("q_emb"), col("c_emb")))
-      .withColumn("prn", row_number().over(probeW))
-      .filter(col("prn") <= maxP)
-      .select(col("q_id"), col("q_emb"), col("c_id"),
-        col("prn").cast("long").as("prn"))
     // the one scored candidate relation; persisted — it feeds the top-k
     // ranking AND the per-point cost counts
-    val cand = assigned.join(probes, Seq("c_id"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .select(col("q_id"), col("n_id"), col("prn"), col("cos"))
+    val cand = TopK.scored(ivfLists(embeddings, cent, nQueries, nprobes.max))
+      .select(col("q_id"), col("n_id"), col("c_rank").as("prn"), col("cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val truth = bruteForceTopK(embeddings, nQueries, k)
       .select(col("q_id"), col("n_id"))
@@ -161,10 +120,7 @@ object Similarity {
     import spark.implicits._
     val nps = nprobes.map(_.toLong).toDF("nprobe")
     val perNp = cand.join(broadcast(nps), col("prn") <= col("nprobe"))
-    val topk = perNp.withColumn("rank", row_number().over(
-        Window.partitionBy(col("nprobe"), col("q_id"))
-          .orderBy(col("cos").desc, col("n_id").asc)))
-      .filter(col("rank") <= k)
+    val topk = TopK.rank(perNp, Seq("nprobe", "q_id"), "cos", "n_id", k)
     val hits = topk.join(truth, Seq("q_id", "n_id"))
       .groupBy(col("nprobe")).agg(count(lit(1)).as("hits"))
     val cost = perNp.groupBy(col("nprobe"))
@@ -210,43 +166,33 @@ object Similarity {
     * Returns final (vec_id, cluster) assignments. */
   def kmeans(embeddings: DataFrame, seedEvery: Int, iters: Int): DataFrame =
     kmeansState(embeddings, seedEvery, iters)._1
-      .select(col("vec_id"), col("cluster"))
+      .select(col("n_id").as("vec_id"), col("c_id").as("cluster"))
 
-  /** The TRAINED centroid frame (cluster, centroid: array<double>) after
-    * `iters` Lloyd rounds — the coarse quantizer q432 probes (the README's
+  /** The TRAINED coarse quantizer (c_id, c_emb: array<double>) after
+    * `iters` Lloyd rounds — the frame [[ivfSweepWith]] probes in q432 (the
     * "swap in trained centroids" path, made concrete). */
   def kmeansCentroids(embeddings: DataFrame, seedEvery: Int,
                       iters: Int): DataFrame =
     kmeansState(embeddings, seedEvery, iters)._2
 
-  /** Shared Lloyd loop: returns (final assignment, final centroids). */
+  /** Shared Lloyd loop: returns (final assignment, final centroids). Each
+    * round is one [[TopK.assign]]. */
   private def kmeansState(embeddings: DataFrame, seedEvery: Int,
                           iters: Int): (DataFrame, DataFrame) = {
-    // centroid frame: (cluster, centroid: array<double>)
-    var centroids = embeddings.filter(col("vec_id") % seedEvery === 0)
-      .select(col("vec_id").as("cluster"),
-        transform(col("embedding"), x => x.cast("double")).as("centroid"))
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cluster").asc)
-      embeddings.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cent), lit(true))
-        .withColumn("ccos", cosine(col("embedding"), col("centroid")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("embedding"), col("cluster"))
-    }
-    var assigned = assign(centroids)
+    val vecs = TopK.vectors(embeddings, "n")
+    var centroids = TopK.centroids(embeddings, seedEvery)
+      .select(col("c_id"), transform(col("c_emb"), x => x.cast("double")).as("c_emb"))
+    var assigned = TopK.assign(vecs, "n", centroids)
     for (_ <- 1 until iters) {
       centroids = assigned
-        .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x")))
+        .select(col("c_id"), posexplode(col("n_emb")).as(Seq("dim", "x")))
         .withColumn("xi", round(col("x").cast("double") * 1000000).cast("long"))
-        .groupBy(col("cluster"), col("dim"))
+        .groupBy(col("c_id"), col("dim"))
         .agg((sum(col("xi")) / lit(1000000.0) / count(lit(1))).as("c"))
-        .groupBy(col("cluster"))
+        .groupBy(col("c_id"))
         .agg(array_sort(collect_list(struct(col("dim"), col("c"))))
-          .getField("c").as("centroid"))
-      assigned = assign(centroids)
+          .getField("c").as("c_emb"))
+      assigned = TopK.assign(vecs, "n", centroids)
     }
     (assigned, centroids)
   }
@@ -314,27 +260,17 @@ object Similarity {
   /** Hard-negative mining: for each query vector, the k most cosine-similar
     * corpus vectors with a DIFFERENT label — the contrastive-training
     * counterpart of plain top-k retrieval (a hard negative is close in
-    * embedding space but wrong in label space). Same broadcast + window
-    * shape as bruteForceTopK with the label inequality pushed into the join
-    * condition, so non-candidates never reach the scoring expression.
+    * embedding space but wrong in label space). [[bruteForceTopK]] with
+    * the label inequality as the extra [[TopK.allPairs]] join condition,
+    * so non-candidates never reach the scoring expression.
     */
-  def hardNegatives(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
-    val c = embeddings
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("label").as("n_label"))
-    val scored = c.join(broadcast(q),
-        col("q_id") =!= col("n_id") && col("q_label") =!= col("n_label"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  def hardNegatives(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame =
+    TopK.exact(TopK.allPairs(
+        queries(embeddings, nQueries, col("label").as("q_label")),
+        TopK.vectors(embeddings, "n", col("label").as("n_label")),
+        col("q_label") =!= col("n_label")), k)
       .select(col("q_id"), col("q_label"), col("rank").cast("int").as("rank"),
         col("n_id"), col("n_label"), col("cos"))
-  }
 
   /** MUTUAL k-NN GRAPH over the whole corpus — the symmetric-neighbor
     * structure semantic-dedup and density-based clustering build on
@@ -347,37 +283,15 @@ object Similarity {
     * corpus side stays partitioned; the query side broadcasts — at real
     * scale swap the candidate generation for the IVF lists (ivfTopK) or
     * LSH buckets (embeddingNearDupPairs) and keep everything downstream
-    * unchanged). The directed top-k is a WindowGroupLimit (each mapper
-    * emits ≤ k rows per query); the mutuality test is a self-equi-join on
-    * the REDUCED |V|·k edge list, not on raw scores.
+    * unchanged). The directed top-k is [[TopK.exact]] over
+    * [[TopK.allPairs]]; the mutuality test is a self-equi-join on the
+    * REDUCED |V|·k edge list, not on raw scores.
     */
   def mutualKnn(embeddings: DataFrame, k: Int): DataFrame = {
-    val nPart = embeddings.sparkSession.sessionState.conf.numShufflePartitions
-    // norms are per-VECTOR, not per-pair: hoist sqrt(|v|²) out of the
-    // quadratic stage (cos = dot/(qn·nn) on identical operands is
-    // bit-identical to the inline form). The corpus side round-robins
-    // across the full core count first — a small embedding table arrives
-    // as ONE parquet split, which would pin the whole O(n²) scoring loop
-    // to a single core (measured 6×, exactly that, at sf0.1).
-    val q = embeddings.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"), sqrt(norm2(col("embedding"))).as("q_n"))
-    val c = embeddings.repartition(nPart)
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        sqrt(norm2(col("embedding"))).as("n_n"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    // ... and the embeddings leave the plan BEFORE the top-k window: the
-    // shuffle+sort carries (q_id, n_id, cos) = 24 B/row, not two 256 B
-    // float arrays
     // persisted: BOTH sides of the mutuality join read this top-k list —
     // uncached, the O(n²) scoring pass replans per side (plan census r8)
-    val knn = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_emb"), col("n_emb")) / (col("q_n") * col("n_n")))
-          .as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), col("cos"))
+    val knn = TopK.exact(TopK.allPairs(TopK.vectors(embeddings, "q"),
+        TopK.vectors(embeddings, "n")), k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // cos is exactly symmetric (per-index products commute, fold order
     // identical), so carrying it from the v1→v2 direction loses nothing
@@ -385,8 +299,8 @@ object Similarity {
         col("a.q_id") === col("b.n_id") && col("a.n_id") === col("b.q_id") &&
           col("a.q_id") < col("a.n_id"))
       .select(col("a.q_id").as("v1"), col("a.n_id").as("v2"),
-        col("a.rank").cast("long").as("rank12"),
-        col("b.rank").cast("long").as("rank21"), col("a.cos").as("cos"))
+        col("a.rank").as("rank12"), col("b.rank").as("rank21"),
+        col("a.cos").as("cos"))
   }
 
   /** k-CENTER GREEDY (farthest-point traversal) CORESET selection — the
@@ -450,10 +364,7 @@ object Similarity {
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_a")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_b")), lit(0.0)))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("rrf").desc, col("n_id").asc)
-    joined.withColumn("fused_rank", row_number().over(w))
-      .filter(col("fused_rank") <= topK)
+    TopK.rank(joined, Seq("q_id"), "rrf", "n_id", topK, "fused_rank")
       .select(col("q_id"), col("fused_rank").cast("int").as("fused_rank"),
         col("n_id"), col("rrf"), col("rank_a"), col("rank_b"))
   }
@@ -500,15 +411,11 @@ object Similarity {
     val sub = subspaces(embeddings, m, subDim)
     var cent = sub.filter(col("vec_id") % seedEvery === 0)
       .select(col("s"), col("vec_id").as("cluster"), col("v").as("c"))
-    def assign(ct: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"), col("s"))
-        .orderBy(col("d").asc, col("cluster").asc)
-      sub.join(broadcast(ct), Seq("s"))
-        .withColumn("d", l2sq(col("v"), col("c")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+    def assign(ct: DataFrame): DataFrame =
+      TopK.rank(sub.join(broadcast(ct), Seq("s"))
+          .withColumn("d", l2sq(col("v"), col("c"))),
+        Seq("vec_id", "s"), "d", "cluster", 1, ascending = true)
         .select(col("vec_id"), col("s"), col("v"), col("cluster"))
-    }
     var assigned = assign(cent)
     for (_ <- 1 until iters) {
       cent = assigned
@@ -553,10 +460,7 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("s"), col("d")))).as("ds"))
       .withColumn("adist",
         aggregate(col("ds").getField("d"), lit(0.0), (acc, x) => acc + x))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    TopK.rank(pairs, Seq("q_id"), "adist", "vec_id", k, "rnk", ascending = true)
       .select(col("q_id"), col("vec_id").as("n_id"), col("adist"), col("rnk"))
   }
 

@@ -262,18 +262,6 @@ object TrainPrep {
       .filter(col("rn") <= n)
   }
 
-  /** Top-k rows per group by `ordCol` descending (ties broken by `tieCol`
-    * ascending, so the result is a deterministic set). The group-limit
-    * pattern: one shuffle on the group key, per-group heap — never a global
-    * sort. */
-  def topKPerGroup(df: DataFrame, grpCol: String, ordCol: String,
-                   tieCol: String, k: Int): DataFrame = {
-    val w = Window.partitionBy(col(grpCol))
-      .orderBy(col(ordCol).desc, col(tieCol).asc)
-    df.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
   /** Decile (n-bin) statistics of order value: ntile over the total order
     * (cents, then key — fully deterministic), then per-bin count/min/max/sum.
     * ntile needs a GLOBAL sort (single-partition window) — correct up to

@@ -584,7 +584,13 @@ object ServingEndpoint {
             i += 1
             sb.append(in(i) match {
               case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
-              case c => c
+              case 'b' => '\b'; case 'f' => '\f'
+              case c @ ('"' | '\\' | '/') => c
+              case 'u' if i + 4 < in.length &&
+                  (i + 1 to i + 4).forall(j => Character.digit(in(j), 16) >= 0) =>
+                i += 4
+                Integer.parseInt(in.substring(i - 3, i + 1), 16).toChar
+              case _ => return None
             })
           } else sb.append(in(i))
           i += 1
@@ -627,13 +633,25 @@ object ServingEndpoint {
       None
     }
 
-    def escape(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c => c.toString
+    /** The body of a JSON string: `"`, `\` and every character below
+      * 0x20 escaped (RFC 8259 section 7). A string with nothing to escape
+      * is returned as it is. */
+    def escape(s: String): String = {
+      var i = 0
+      while (i < s.length && s(i) >= ' ' && s(i) != '"' && s(i) != '\\') i += 1
+      if (i == s.length) return s
+      val sb = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+      for (c <- s.substring(i)) c match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
       }
+      sb.toString
+    }
   }
 
   /** Render a flat JSON object; Doubles via Java's shortest-repr
@@ -645,6 +663,6 @@ object ServingEndpoint {
         case null => "null"
         case other => other.toString
       }
-      "\"" + k + "\": " + rendered
+      "\"" + Json.escape(k) + "\": " + rendered
     }.mkString("{", ", ", "}")
 }

@@ -175,6 +175,16 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("only TopK ranks by cosine: one tie-break for every similarity ranking") {
+    // a hand-written rank or nearest-centroid window shows up as a window
+    // ordered by the pair cosine (cos) or the centroid cosine (c_cos/ccos)
+    val pat = """orderBy\(\s*(col\(|desc\(|asc\(|\$)"(c_?)?cos"""".r
+    val found = mainSources().collect {
+      case (name, src) if pat.findFirstIn(src).isDefined => name
+    }
+    assert(found.forall(_ == "TopK.scala"), found.mkString(", "))
+  }
+
   test("the serving edge answers on its own blocking sockets, not the JDK HttpServer") {
     // the JDK server runs every handler on one dispatcher thread and
     // writes headers and body apart (about 44 ms per back-to-back

@@ -136,4 +136,24 @@ class HttpServingSpec extends SparkSpec {
     assert(Json.parseFlat("""{"a": 1""").isEmpty)
     assert(Json.parseFlat("""{"a": 1e-3}""") == Some(Map("a" -> 0.001)))
   }
+
+  test("obj writes no raw control character, in values or keys, and parses back") {
+    import ServingEndpoint.Json
+    val detail = "line 1\r\n\tline \"2\" \\ \u0001\u001f end"
+    val key = "k\tey"
+    val out = ServingEndpoint.obj("detail" -> detail, key -> 1.5)
+    assert(!out.exists(_ < ' '), out)
+    assert(Json.parseFlat(out) == Some(Map("detail" -> detail, key -> 1.5)))
+    val plain = "nothing to escape"
+    assert(Json.escape(plain) eq plain)
+  }
+
+  test("parseFlat decodes every RFC 8259 string escape and rejects unknown ones") {
+    import ServingEndpoint.Json
+    assert(Json.parseFlat("{\"k\": \"\\u0041\"}") == Some(Map("k" -> "A")))
+    assert(Json.parseFlat("{\"k\": \"\\b\\f\\/\\\"\\\\\\n\\r\\t\\u00e9\"}") ==
+      Some(Map("k" -> "\b\f/\"\\\n\r\t\u00e9")))
+    assert(Json.parseFlat("{\"k\": \"\\x\"}").isEmpty)
+    assert(Json.parseFlat("{\"k\": \"\\u00g1\"}").isEmpty)
+  }
 }

@@ -35,6 +35,13 @@ class ParallelismInvarianceSpec extends SparkSpec {
     "q158_topk_list",          // ordered list aggregation
     "q314_weighted_reservoir", // hash-keyed reservoir with pinned ties
     "q296_bootstrap_ci",       // replicate means over integer-cent sums
+    // similarity top-k through TopK: (cos, n_id) ranks, c_id-asc
+    // assignment, the label-filtered all-pairs source, and the
+    // round-robin corpus split whose width is the partition count
+    "q27_ann_topk",
+    "q134_hard_negatives",
+    "q153_mutual_knn",
+    "q236_knn_accuracy",
     // r8 census-persisted queries: a persist() must not freeze a
     // layout-dependent result (it caches whatever the first action saw),
     // so the queries that gained persists + repartitions this round get

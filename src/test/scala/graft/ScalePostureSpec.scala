@@ -102,10 +102,10 @@ class ScalePostureSpec extends SparkSpec {
     // per-partition top-k pushed below the exchange — each mapper emits at
     // most k rows per group instead of its whole partition. This is the
     // plan property that makes q56 viable at 100 TB.
-    val plan = planOf(graft.ext.TrainPrep.topKPerGroup(
+    val plan = planOf(graft.ext.TopK.rank(
       Tables.orders(spark, sf).select(col("o_custkey"), col("o_orderkey"),
         col("o_totalprice")),
-      "o_custkey", "o_totalprice", "o_orderkey", 3))
+      Seq("o_custkey"), "o_totalprice", "o_orderkey", 3))
     assert(plan.contains("WindowGroupLimit"),
       "expected WindowGroupLimit in:\n" +
         plan.linesIterator.take(30).mkString("\n"))

@@ -40,7 +40,7 @@ class TrainPrepSpec extends SparkSpec {
   test("topKPerGroup returns the k largest with deterministic ties") {
     val df = Seq((1L, 10L, 5.0), (1L, 11L, 5.0), (1L, 12L, 3.0), (2L, 20L, 1.0))
       .toDF("g", "id", "v")
-    val top = TrainPrep.topKPerGroup(df, "g", "v", "id", 2)
+    val top = graft.ext.TopK.rank(df, Seq("g"), "v", "id", 2)
       .select($"g", $"id").as[(Long, Long)].collect().toSet
     assert(top == Set((1L, 10L), (1L, 11L), (2L, 20L))) // tie broken by id asc
   }
