@@ -62,8 +62,11 @@ object LocalInfer {
         val asOfUs =
           if (opts.contains("latest")) Long.MaxValue
           else opts.get("t-ref") match {
-            case Some(s) => ServingEndpoint.parseInstantUs(s).getOrElse(
-              throw new IllegalArgumentException(s"unparseable --t-ref: $s"))
+            case Some(s) =>
+              val us = ServingEndpoint.parseInstantUs(s)
+              if (us == ServingEndpoint.NoInstant)
+                throw new IllegalArgumentException(s"unparseable --t-ref: $s")
+              us
             case None => Long.MaxValue
           }
         FeatureStore.snapshot(gold, id, asOfUs) match {

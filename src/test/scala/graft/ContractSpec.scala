@@ -195,6 +195,33 @@ class ContractSpec extends SparkSpec {
     assert(found.isEmpty, found.mkString(", "))
   }
 
+  test("the serving edge holds one JSON reader and one JSON writer") {
+    // parseFlat and /predict both read through Json.scan, every response
+    // body goes through Json.Writer, and nothing in the file builds a
+    // response String with mkString or reads a request with split: a
+    // second parser or renderer shows up as a second number reader, scan
+    // or Writer, or as one of those calls
+    val src = mainSources().collect { case ("ServingEndpoint.scala", s) => s }
+    assert(src.size == 1)
+    val s = src.head
+    def count(pat: String) = pat.r.findAllIn(s).size
+    def body(name: String) = {
+      val at = s.indexOf(s"def $name(")
+      assert(at >= 0, name)
+      s.substring(at, s.indexOf("\n\n", at))
+    }
+    assert(count("""\bdef scan\(""") == 1)
+    assert(count("""\bclass Writer\b""") == 1)
+    assert(count("""parseDouble|valueOf|toDoubleOption|toLongOption|parseLong""") == 1)
+    assert(count("""mkString|\.split\(|readLine|BufferedInputStream""") == 0)
+    assert(body("parseFlat").contains("scan("))
+    assert(body("predict").contains("Json.scan("))
+    val parsers = mainSources().collect {
+      case (name, src) if """\bdef parseFlat\b|\bclass Writer\b""".r.findFirstIn(src).isDefined => name
+    }
+    assert(parsers == Seq("ServingEndpoint.scala"), parsers.mkString(", "))
+  }
+
   test("the streaming sinks share one reader, one foreachBatch and one overwrite") {
     // every stream reads through eventStream, every sink runs through
     // foreachBatchSink, and every weekly sketch store merges through

@@ -135,6 +135,18 @@ class HttpServingSpec extends SparkSpec {
     assert(Json.parseFlat("""{"a": [1]}""").isEmpty)
     assert(Json.parseFlat("""{"a": 1""").isEmpty)
     assert(Json.parseFlat("""{"a": 1e-3}""") == Some(Map("a" -> 0.001)))
+    // nothing but whitespace may follow an empty object
+    assert(Json.parseFlat("{}x}").isEmpty)
+    assert(Json.parseFlat("{ }, }").isEmpty)
+    assert(Json.parseFlat(" {\t} ") == Some(Map.empty))
+    // no leading zero before another digit (RFC 8259 section 6)
+    Seq("01", "-01", "00", "00.5", "007e1").foreach { n =>
+      assert(Json.parseFlat(s"""{"a": $n}""").isEmpty, n)
+    }
+    assert(Json.parseFlat("""{"a": 0, "b": -0.5, "c": 0e2, "d": 10, "e": 1234567890123456789}""") ==
+      Some(Map("a" -> 0.0, "b" -> -0.5, "c" -> 0.0, "d" -> 10.0, "e" -> 1.2345678901234568e18)))
+    // a repeated key keeps its last non-null value
+    assert(Json.parseFlat("""{"a": 1, "a": "x", "a": null}""") == Some(Map("a" -> "x")))
   }
 
   test("obj writes no raw control character, in values or keys, and parses back") {

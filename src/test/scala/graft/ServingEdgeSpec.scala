@@ -14,8 +14,9 @@ import graft.store.ServingEndpoint.isoUs
 /** The serving edge's own HTTP server and index: a `/refresh` that swaps
   * the table while predicts run, back-to-back keep-alive latency, the
   * binary-search lookup against the reference `takeWhile` semantics, the
-  * request and connection guards, `stop()`, and `/metrics`. Every case
-  * opens only a handful of sockets. */
+  * request and connection guards, `stop()`, `/metrics`, pipelined
+  * requests, and response bytes against recorded ones. Every case opens
+  * only a handful of sockets. */
 class ServingEdgeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,10 +32,8 @@ class ServingEdgeSpec extends SparkSpec {
     def raw(bytes: String): Unit = { out.write(bytes.getBytes(UTF_8)); out.flush() }
 
     def send(method: String, path: String, body: String = ""): (Int, String) = {
-      val b = body.getBytes(UTF_8)
-      raw(s"$method $path HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
-        s"Content-Type: application/json\r\nContent-Length: ${b.length}\r\n\r\n" + body)
-      read()
+      val (st, b, _) = response(method, path, body)
+      (st, b)
     }
 
     /** Status, body and headers (lower-cased names) of the next response. */
@@ -49,6 +48,13 @@ class ServingEdgeSpec extends SparkSpec {
     }
 
     def read(): (Int, String) = { val (s, b, _) = response(); (s, b) }
+
+    def response(method: String, path: String, body: String): (Int, String, Map[String, String]) = {
+      val b = body.getBytes(UTF_8)
+      raw(s"$method $path HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        s"Content-Type: application/json\r\nContent-Length: ${b.length}\r\n\r\n" + body)
+      response()
+    }
 
     /** True when the server has closed the connection. */
     def closedByServer(): Boolean =
@@ -258,11 +264,19 @@ class ServingEdgeSpec extends SparkSpec {
       "2024-01-15T12:34:56.Z", "2024-01-15T12:34:56.1234567890Z",
       "2024-01-15T12:34:56+01:00", "2024-01-15T12:34:56", "2024-01-15",
       "2024-01-15T12:34Z", "2024-01-15t12:34:56z", "abcd-01-15T12:34:56Z",
-      "0000-01-01T00:00:00Z", "1969-12-31T23:59:59.999999Z", "")
+      "0000-01-01T00:00:00Z", "1969-12-31T23:59:59.999999Z", "",
+      "0000-02-29T00:00:00Z", "1900-02-29T00:00:00Z", "2000-02-29T00:00:00Z",
+      "2023-04-31T00:00:00Z", "2023-13-01T00:00:00Z", "2023-00-10T00:00:00Z",
+      "2023-01-00T00:00:00Z", "9999-12-31T23:59:59.999999999Z") ++
+      // every day of a leap and a common year, and dates across years 0-9999
+      (0 until 731).map(k => java.time.LocalDate.of(2023, 1, 1).plusDays(k) + "T01:02:03Z") ++
+      Seq.fill(500)(java.time.LocalDate.ofEpochDay(
+        rng.nextLong(3652425L) - 719528L) + "T23:59:59.5Z")
     (random ++ edge).foreach { t =>
       assert(ServingEndpoint.parseInstantUs(t) == ServingEndpoint.parsedInstantUs(t), t)
     }
-    assert(ServingEndpoint.parseInstantUs("1970-01-01T00:00:01.0000019Z").contains(1000001L))
+    assert(ServingEndpoint.parseInstantUs("1970-01-01T00:00:01.0000019Z") == 1000001L)
+    assert(ServingEndpoint.parseInstantUs("2024-01-15T12:34:5Z") == ServingEndpoint.NoInstant)
   }
 
   test("guards: 413 over 1 MiB, 411 chunked, 400 malformed, 503 over the connection limit") {
@@ -281,6 +295,13 @@ class ServingEdgeSpec extends SparkSpec {
       assert(chunked._1 == 411 && chunked._3)
       val bad = rejected("GARBAGE\r\n")
       assert(bad._1 == 400 && bad._3)
+      // a trailing space after the version, and a signed Content-Length
+      for (request <- Seq("GET /health HTTP/1.1 \r\n\r\n",
+                          "GET /health HTTP/1.1\r\nContent-Length: +0\r\n\r\n",
+                          "GET /health HTTP/1.1\r\nContent-Length: -0\r\n\r\n")) {
+        val (st, h, closed) = rejected(request)
+        assert(st == 400 && closed && h.get("connection").contains("close"), request)
+      }
 
       val c1 = new Client(port)
       val c2 = new Client(port)
@@ -345,6 +366,187 @@ class ServingEdgeSpec extends SparkSpec {
         // the /metrics response itself counts from the next read on
         assert(field(c.send("GET", "/metrics")._2, "requests").contains("8"))
       } finally c.close()
+    }
+  }
+
+  /** A seeded request mix at sf0.001 that reaches every /predict outcome
+    * (200, each 400, both 404s) and every other route with a fixed body;
+    * the error details carry escapes and non-ASCII text. Requests are
+    * (method, path, body). */
+  private def bodyMix(gold: org.apache.spark.sql.DataFrame): Seq[(String, String, String)] = {
+    val byUser = gold.select("user_id", "ts_us").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (u, ts) => u -> ts.map(_._2).sorted }
+    val users = byUser.keys.toIndexedSeq.sorted
+    val rng = new scala.util.Random(20261020)
+    def iso(us: Long) = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS).toString
+    val u0 = users.head
+    val fixed = Seq(
+      ("GET", "/health", ""), ("GET", "/predict", ""), ("POST", "/nope?x=1", ""),
+      ("GET", "/debug/log_state", ""), ("POST", "/debug/write_test", ""),
+      ("POST", "/predict", "not json"),
+      ("POST", "/predict", """{"latest": true}"""),
+      ("POST", "/predict", """{"customer_id": 1.5}"""),
+      ("POST", "/predict", """{"customer_id": "7"}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "threshold": 2}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "threshold": true}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "tab\\there \\"q\\" \\\\ \\u00e9\\u20ac"}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "1990-01-01"}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "${iso(byUser(u0).head)}"}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "2030-01-15T12:00:00+01:00", "latest": false}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "2030-01-15"}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "latest": true, "threshold": 0}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "latest": true, "threshold": 1e0}"""),
+      ("POST", "/predict", s"""{"customer_id": 99, "customer_id": ${u0}e0, "t_ref": 5, "latest": null}"""),
+      ("POST", "/predict", s"""{"customer_id": $u0, "t_ref": "2024-01-15T12:00:00.123456789Z"}"""),
+      ("POST", "/predict", """{"customer_id": 99999999}"""),
+      ("POST", "/predict", """{"customer_id": -3, "latest": true}"""),
+      ("POST", "/refresh", "{}"))
+    val random = Seq.fill(30) {
+      val u = users(rng.nextInt(users.size))
+      val ts = byUser(u)
+      val (lo, hi) = (ts.head, ts.last)
+      val tRef = lo - (hi - lo) / 8 + (rng.nextDouble() * (hi - lo) * 1.25).toLong
+      val threshold = if (rng.nextBoolean()) "" else f""", "threshold": ${rng.nextDouble()}%.3f"""
+      val body = rng.nextInt(4) match {
+        case 0 => s"""{"customer_id": $u, "latest": true$threshold}"""
+        case 1 => s"""{"customer_id": $u$threshold}"""
+        case _ => s"""{"customer_id": $u, "t_ref": "${iso(tRef)}"$threshold}"""
+      }
+      ("POST", "/predict", body)
+    }
+    fixed ++ random
+  }
+
+  /** What the endpoint answered to [[bodyMix]] when it rendered every body
+    * as a `String` and encoded it whole. */
+  private val BodyMixResponses: Seq[(Int, String)] = Seq(
+    200 -> "{\"status\": \"ok\", \"backend\": \"offline\", \"model\": \"edge\", \"offline_rows\": 1000}",
+    405 -> "{\"detail\": \"use POST\"}",
+    404 -> "{\"detail\": \"no route /nope\"}",
+    200 -> "{\"pred_files\": 0, \"feature_files\": 0}",
+    503 -> "{\"detail\": \"no predsDir configured\"}",
+    400 -> "{\"detail\": \"malformed JSON body\"}",
+    400 -> "{\"detail\": \"customer_id (integer) is required\"}",
+    400 -> "{\"detail\": \"customer_id (integer) is required\"}",
+    400 -> "{\"detail\": \"customer_id (integer) is required\"}",
+    400 -> "{\"detail\": \"threshold must be in [0, 1]\"}",
+    400 -> "{\"detail\": \"threshold must be in [0, 1]\"}",
+    400 -> "{\"detail\": \"unparseable t_ref: tab\\there \\\"q\\\" \\\\ \u00e9\u20ac\"}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 1990-01-01 for customer_id=0\"}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-01T02:22:23.261694Z\", \"probability\": 1.0, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-14T18:00:10.536478Z\", \"probability\": 0.23005076453537415, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No features for customer_id=99999999\"}",
+    404 -> "{\"detail\": \"No features for customer_id=-3\"}",
+    200 -> "{\"reloaded_rows\": 1000}",
+    200 -> "{\"customer_id\": 12, \"t_ref\": \"2024-01-30T17:51:50.232387Z\", \"probability\": 0.06808618803589504, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-30T20:27:19.872792Z for customer_id=14\"}",
+    200 -> "{\"customer_id\": 7, \"t_ref\": \"2024-01-30T21:39:26.208594Z\", \"probability\": 0.1266474725386064, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 6, \"t_ref\": \"2024-01-30T10:43:19.366732Z\", \"probability\": 0.5635284394019084, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 5, \"t_ref\": \"2024-01-29T16:31:24.014695Z\", \"probability\": 0.3563030000712606, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 9, \"t_ref\": \"2024-01-30T22:20:38.235689Z\", \"probability\": 0.24963802486394723, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 14, \"t_ref\": \"2024-01-30T16:42:28.098474Z\", \"probability\": 0.16444843993246652, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 1, \"t_ref\": \"2024-01-30T14:03:35.462107Z\", \"probability\": 0.27783437366871033, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 5, \"t_ref\": \"2024-01-08T06:40:30.949893Z\", \"probability\": 0.19598620257133897, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-29T12:40:02.515953Z for customer_id=1\"}",
+    200 -> "{\"customer_id\": 12, \"t_ref\": \"2024-01-03T21:55:35.290537Z\", \"probability\": 0.24165874563000433, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 3, \"t_ref\": \"2024-01-03T11:23:52.769993Z\", \"probability\": 0.4631058968817537, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-28T14:29:38.876907Z for customer_id=10\"}",
+    200 -> "{\"customer_id\": 1, \"t_ref\": \"2024-01-30T14:03:35.462107Z\", \"probability\": 0.27783437366871033, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 3, \"t_ref\": \"2024-01-30T16:19:14.393990Z\", \"probability\": 1.0, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 3, \"t_ref\": \"2024-01-30T16:19:14.393990Z\", \"probability\": 1.0, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 11, \"t_ref\": \"2024-01-30T23:26:16.220708Z\", \"probability\": 0.2489296027083541, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 3, \"t_ref\": \"2024-01-25T01:06:09.840271Z\", \"probability\": 0.2634490752937457, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-28T10:50:19.959131Z for customer_id=13\"}",
+    200 -> "{\"customer_id\": 1, \"t_ref\": \"2024-01-30T14:03:35.462107Z\", \"probability\": 0.27783437366871033, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-15T14:34:09.798878Z\", \"probability\": 0.43869911090313524, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 14, \"t_ref\": \"2024-01-17T02:19:19.237232Z\", \"probability\": 0.1612071189063709, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 14, \"t_ref\": \"2024-01-30T16:42:28.098474Z\", \"probability\": 0.16444843993246652, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-30T22:22:08.594853Z for customer_id=8\"}",
+    200 -> "{\"customer_id\": 2, \"t_ref\": \"2024-01-14T09:45:29.586277Z\", \"probability\": 0.3201502571873733, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 5, \"t_ref\": \"2024-01-26T23:43:33.112398Z\", \"probability\": 1.0, \"prediction\": 1}",
+    200 -> "{\"customer_id\": 12, \"t_ref\": \"2024-01-30T17:51:50.232387Z\", \"probability\": 0.06808618803589504, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 0, \"t_ref\": \"2024-01-30T18:46:21.466163Z\", \"probability\": 0.15340246671166471, \"prediction\": 0}",
+    200 -> "{\"customer_id\": 10, \"t_ref\": \"2024-01-08T14:18:44.385965Z\", \"probability\": 0.22635017881664127, \"prediction\": 0}",
+    404 -> "{\"detail\": \"No feature snapshot at/before 2023-12-29T02:38:56.955717Z for customer_id=5\"}")
+
+  test("response bodies stay byte-identical for a seeded sf0.001 request mix") {
+    val gold = FeatureStore.buildGold(spark, sf).cache()
+    val reqs = bodyMix(gold)
+    val scorer: Array[Double] => Double = x => 1.0 / (1.0 + x(0) / 3.0 + x(1) / 50.0)
+    val ep = new ServingEndpoint(() => gold, FeatureStore.featureNames, scorer, "edge")
+    val port = ep.start()
+    val c = new Client(port)
+    val got =
+      try reqs.map { case (m, p, b) => c.response(m, p, b) }
+      finally { c.close(); ep.stop(); gold.unpersist() }
+    assert(got.size == BodyMixResponses.size)
+    got.zip(BodyMixResponses).zip(reqs).foreach { case (((st, b, h), want), req) =>
+      assert((st, b) == want, req)
+      // valid UTF-8 decodes one way only: equal text and length are equal bytes
+      assert(h("content-length").toInt == want._2.getBytes(UTF_8).length, req)
+    }
+  }
+
+  test("pipelined requests are answered in order from the bytes left in the buffer") {
+    withEndpoint(() => table('A')) { (port, _) =>
+      val c = new Client(port)
+      try {
+        def request(body: String) =
+          s"POST /predict HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+            s"Content-Length: ${body.getBytes(UTF_8).length}\r\n\r\n$body"
+        val bodies = Seq("""{"customer_id": 1, "latest": true}""",
+          """{"customer_id": 2, "t_ref": "1970-01-01T00:00:03Z"}""", """{"customer_id": 99}""")
+        val alone = bodies.map(c.send("POST", "/predict", _))
+        assert(alone.map(_._1) == Seq(200, 200, 404))
+        // two requests and the head of a third in one segment
+        c.raw(request(bodies(0)) + request(bodies(1)) + "GET /hea")
+        assert(c.read() == alone(0))
+        assert(c.read() == alone(1))
+        c.raw("lth HTTP/1.1\r\n\r\n")
+        assert(c.read()._1 == 200)
+        // one request split inside a header line and inside its body
+        val whole = request(bodies(2))
+        for (part <- Seq(whole.take(20), whole.slice(20, whole.length - 5), whole.takeRight(5))) {
+          c.raw(part)
+          Thread.sleep(20)
+        }
+        assert(c.read() == alone(2))
+        assert(c.send("GET", "/health")._1 == 200)
+      } finally c.close()
+    }
+  }
+
+  test("isoUs and the writer's numbers match Instant.toString and Double.toString") {
+    def want(us: Long) =
+      java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS).toString
+    def dayUs(y: Int, m: Int, d: Int) = java.time.LocalDate.of(y, m, d).toEpochDay * 86400000000L
+    val rng = new scala.util.Random(13)
+    val yearUs = 365L * 86400000000L
+    val random = Seq.fill(5000)(rng.nextLong(500 * yearUs) - 250 * yearUs) // 1720-2220
+    // and each with a zero fraction and cut to whole milliseconds
+    val shaped = random.flatMap(us =>
+      Seq(us, us - Math.floorMod(us, 1000000L), us - Math.floorMod(us, 1000L)))
+    val years = Seq(999, 1000, 9999, 10000).flatMap { y =>
+      val first = dayUs(y, 1, 1)
+      val last = dayUs(y, 12, 31)
+      Seq(first - 1, first, first + 1000L, last + 86399999999L, last + 86400000000L)
+    }
+    val fixed = Seq(0L, -1L, 1L, 999L, 1000L, -1000L, -86400000000L, Long.MaxValue, Long.MinValue)
+    (random ++ shaped ++ years ++ fixed).foreach { us =>
+      assert(ServingEndpoint.isoUs(us) == want(us), us)
+    }
+    val doubles = Seq.fill(2000)(java.lang.Double.longBitsToDouble(rng.nextLong())) ++
+      Seq.fill(2000)(rng.nextDouble()) ++ Seq(0.0, -0.0, 1.0, 0.1, 1e-3, 1e7, 1e-7,
+        Double.MinPositiveValue, Double.MaxValue, Double.NaN, Double.NegativeInfinity)
+    val key = new ServingEndpoint.Json.Key("p")
+    doubles.foreach { d =>
+      val w = new ServingEndpoint.Json.Writer(0)
+      assert(w.open().field(key, d).end().utf8 == s"""{"p": ${java.lang.Double.toString(d)}}""", d)
     }
   }
 }
